@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyield_spark import du as du_mod
 from pyield_spark.bonds.pricing import dv01_expr
 from pyield_spark.curves.forwards import forwards_expr
+from pyield_spark.functions.sql import ident
 
 MONTH_CODES = "FGHJKMNQUVXZ"  # Jan..Dec
 RATE_CONTRACTS = {"DI1", "DAP", "DDI", "FRC", "FRO"}
@@ -50,38 +51,12 @@ def normalizar_contratos(valores) -> list[str]:
     return out
 
 
-def month_from_code_expr(code: str | Column) -> Column:
-    """Month-code letter → month number (invalid → null)."""
-    c = F.upper(F.col(code) if isinstance(code, str) else code)
-    out = F.lit(None).cast("int")
-    for i, letter in enumerate(MONTH_CODES, start=1):
-        out = F.when(c == letter, F.lit(i)).otherwise(out)
-    return out
-
-
-def raw_maturity_expr(ticker: str | Column, contrato: str) -> Column:
-    """Unrolled maturity date from a 6-char ticker (day 1; 15 for DAP).
-    Malformed tickers (non-digit year positions, invalid month letter)
-    yield null on ANY session — ``try_cast`` keeps the year parse
-    ANSI-independent, matching ``month_from_code_expr``'s null."""
-    t = F.upper(F.col(ticker) if isinstance(ticker, str) else ticker)
-    day = 15 if "DAP" in contrato.upper() else 1
-    return F.make_date(
-        F.substring(t, 5, 2).try_cast("int") + 2000,
-        month_from_code_expr(F.substring(t, 4, 1)),
-        F.lit(day),
-    )
-
-
 def raw_maturity_sql(ticker_sql: str, contrato: str) -> str:
-    """Spark-SQL-string twin of :func:`raw_maturity_expr` — ONE py4j
-    round trip instead of ~40 (the month-letter when-chain alone is 36
-    JVM calls; plan-build cost was half of q_futuro_panel's cold run,
-    PLANS.md cProfile). Same null contract: a malformed ticker nulls
-    the month (locate → 0 → nullif) or the year (try_cast), and
-    ``make_date`` propagates either null. Equivalence is pinned by
-    tests/test_functions.py::test_raw_maturity_sql_twin on valid,
-    lowercase, malformed and short tickers."""
+    """Unrolled maturity date from a 6-char ticker SQL fragment (day 1;
+    15 for DAP), as SQL text. Malformed tickers yield null on ANY
+    session: an invalid month letter nulls the month (locate → 0 →
+    nullif), a non-digit year nulls the year (``try_cast``, so the
+    parse is ANSI-independent), and ``make_date`` propagates either."""
     day = 15 if "DAP" in contrato.upper() else 1
     t = f"upper({ticker_sql})"
     return (
@@ -95,7 +70,9 @@ def with_vencimento(
 ) -> DataFrame:
     """Maturity from ticker, rolled forward to a business day
     (deslocar(…, 0, 'forward') — contratos.py:153)."""
-    df2 = df.withColumn("_raw_ven", F.expr(raw_maturity_sql(ticker, contrato)))
+    df2 = df.withColumn(
+        "_raw_ven", F.expr(raw_maturity_sql(ident(ticker), contrato))
+    )
     return du_mod.deslocar(df2, "_raw_ven", 0, "forward", alias=alias).drop("_raw_ven")
 
 
@@ -206,7 +183,7 @@ def enriquecer(df: DataFrame, contrato: str) -> DataFrame:
     reference's 24 futuro_YYYYMMDD_* golden parquets from its SPRD
     archives on every SPRD-carried and derived column.
     """
-    from pyield_spark.functions.numbers import round_pl_sql
+    from pyield_spark.functions.numbers import round_pl_expr
 
     contrato = contrato.upper()
     # the prefix is interpolated into a SQL string below — B3 contract
@@ -243,7 +220,7 @@ def enriquecer(df: DataFrame, contrato: str) -> DataFrame:
         )
         out = out.withColumns(
             {
-                c: F.expr(round_pl_sql(f"{c} / 100.0D", 10))
+                c: round_pl_expr(f"{ident(c)} / 100.0D", 10)
                 for c in out.columns
                 if c.startswith("taxa_")
             }

@@ -131,7 +131,7 @@ ntnbp = SimpleNamespace(
 
 ntnc = SimpleNamespace(
     cotacao_df=_pricing.ntnc_cotacao,
-    coupon_expr=_pricing.ntnc_coupon_expr,
+    coupon_sql=_pricing.ntnc_coupon_sql,
 )
 
 lft = SimpleNamespace(

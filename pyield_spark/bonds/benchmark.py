@@ -26,6 +26,8 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyield_spark.functions.sql import ident
+
 # API field → canonical column (pyield/tpf/benchmark.py:57-63)
 _FIELD_MAP = [
     ("TÍTULO", "titulo"),
@@ -42,7 +44,7 @@ def read_benchmarks_json(spark: SparkSession, path: str) -> DataFrame:
     raw = spark.read.option("multiLine", "true").json(path)
     if "registros" not in raw.columns:
         return spark.createDataFrame(
-            [], ", ".join(f"`{orig}` string" for orig, _ in _FIELD_MAP)
+            [], ", ".join(f"{ident(orig)} string" for orig, _ in _FIELD_MAP)
         )
     return raw.select(F.explode("registros").alias("r")).select("r.*")
 

@@ -19,7 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pyield_spark import du as du_mod
-from pyield_spark.bonds.cashflows import coupon_flow_expr, explode_payment_dates
+from pyield_spark.bonds.cashflows import coupon_flow_sql, explode_payment_dates
+from pyield_spark.functions.sql import ident
 
 TOL = 1e-12
 MAX_ITER = 200
@@ -66,7 +67,12 @@ def implied_rates(
     flows = explode_payment_dates(df, settlement, maturity, 6, "data_pagamento")
     flows = du_mod.contar(flows, settlement, "data_pagamento", alias="_du")
     flows = flows.withColumn(
-        "_cf", coupon_flow_expr("data_pagamento", maturity, coupon_value, final_value)
+        "_cf",
+        F.expr(
+            coupon_flow_sql(
+                "data_pagamento", ident(maturity), coupon_value, final_value
+            )
+        ),
     ).withColumn("_au", F.col("_du").cast("double") / 252.0)
     # ONE sorted struct list (premio_limpo's shape; review fix): two
     # parallel collect_lists summed the PV in partition-merge order
@@ -236,7 +242,12 @@ def premio_limpo(
         distribution="broadcast",
     ).withColumn("_di", pround_expr("_di_raw", 10))
     flows = flows.withColumn(
-        "_cf", coupon_flow_expr("data_pagamento", maturity, coupon_value, final_value)
+        "_cf",
+        F.expr(
+            coupon_flow_sql(
+                "data_pagamento", ident(maturity), coupon_value, final_value
+            )
+        ),
     )
     # STN price in the SAME groupBy as the flow packing: the exploded
     # flow table already carries taxa/du/cf, so pricing does not need a

@@ -11,103 +11,76 @@ the fact table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from pyield_spark.functions.sql import ident
 
 
 def explode_payment_dates(
     df: DataFrame,
-    settlement: str | Column,
-    maturity: str | Column,
+    settlement: str,
+    maturity: str,
     interval_months: int = 6,
     alias: str = "data_pagamento",
 ) -> DataFrame:
-    """One output row per payment date in (settlement, maturity].
+    """One output row per payment date in (settlement, maturity] of the
+    named date columns.
 
     Rows whose settlement >= maturity produce no output (empty flow set,
-    matching the reference's empty frame).
+    matching the reference's empty frame). Built from parsed SQL: 4 py4j
+    round trips instead of ~180.
     """
     if interval_months <= 0:
         raise ValueError("interval_months must be positive")
-    if isinstance(settlement, str) and isinstance(maturity, str):
-        # parsed-SQL fast path (r11 build optimization): the identical
-        # expression trees in 4 py4j round trips instead of ~180 —
-        # every call site in the engine passes column NAMES
-        liq_s = f"to_date(`{settlement}`)"
-        ven_s = f"to_date(`{maturity}`)"
-        iv = f"{float(interval_months)!r}D"
-        return (
-            df.withColumn(
-                "_n_max",
-                F.expr(
-                    "greatest(CAST(ceil(months_between("
-                    f"{ven_s}, {liq_s}) / {iv}) AS INT) + 1, 0)"
-                ),
-            )
-            .withColumn("_i", F.expr("explode(sequence(0, _n_max))"))
-            .withColumn(
-                alias,
-                F.expr(f"add_months({ven_s}, -_i * {interval_months})"),
-            )
-            .filter(F.expr(f"`{alias}` > {liq_s}"))
-            .drop("_n_max", "_i")
-        )
-    liq = F.to_date(F.col(settlement) if isinstance(settlement, str) else settlement)
-    ven = F.to_date(F.col(maturity) if isinstance(maturity, str) else maturity)
-
-    # upper bound on #periods: months difference / interval, +2 slack;
+    liq_s = f"to_date({ident(settlement)})"
+    ven_s = f"to_date({ident(maturity)})"
+    iv = f"{float(interval_months)!r}D"
+    # upper bound on #periods: months difference / interval, +1 slack;
     # the filter below trims exactly.
-    n_max = (
-        F.ceil(F.months_between(ven, liq) / F.lit(float(interval_months)))
-        .cast("int")
-        + F.lit(1)
-    )
-    out = (
-        df.withColumn("_n_max", F.greatest(n_max, F.lit(0)))
-        .withColumn("_i", F.explode(F.sequence(F.lit(0), F.col("_n_max"))))
-        .withColumn(alias, F.add_months(ven, -F.col("_i") * interval_months))
-        .filter(F.col(alias) > liq)
+    return (
+        df.withColumn(
+            "_n_max",
+            F.expr(
+                "greatest(CAST(ceil(months_between("
+                f"{ven_s}, {liq_s}) / {iv}) AS INT) + 1, 0)"
+            ),
+        )
+        .withColumn("_i", F.expr("explode(sequence(0, _n_max))"))
+        .withColumn(
+            alias,
+            F.expr(f"add_months({ven_s}, -_i * {interval_months})"),
+        )
+        .filter(F.expr(f"{ident(alias)} > {liq_s}"))
         .drop("_n_max", "_i")
     )
-    return out
 
 
-def coupon_flow_expr(
-    pay_date: str | Column,
-    maturity: str | Column,
-    coupon_value: float | Column,
-    final_value: float | Column,
-) -> Column:
-    """Flow amount: coupon everywhere, coupon+principal at maturity
-    (reference: pyield/tpf/titulos/ntnf.py:268-276). Column-valued
-    coupons support per-row conventions (NTN-C's 2031 12% exception,
-    pyield/tpf/titulos/ntnc.py:24-40)."""
-    p = F.col(pay_date) if isinstance(pay_date, str) else pay_date
-    m = F.to_date(F.col(maturity) if isinstance(maturity, str) else maturity)
-    cv = F.lit(coupon_value) if isinstance(coupon_value, (int, float)) else coupon_value
-    fv = F.lit(final_value) if isinstance(final_value, (int, float)) else final_value
-    return F.when(p == m, fv).otherwise(cv)
+def _sql_value(v: float | str) -> str:
+    return f"{float(v)!r}D" if isinstance(v, (int, float)) else f"({v})"
 
 
 def coupon_flow_sql(
     pay_date: str,
     maturity: str,
-    coupon_value: float,
-    final_value: float,
+    coupon_value: float | str,
+    final_value: float | str,
 ) -> str:
-    """SQL-string twin of :func:`coupon_flow_expr` for float-valued
-    coupons over named columns — the identical CaseWhen/Literal tree in
-    one parse (r11 build optimization). Exact double literals via repr
-    (shortest round-trip decimal)."""
+    """Flow amount over SQL fragments: coupon everywhere,
+    coupon+principal at maturity (reference:
+    pyield/tpf/titulos/ntnf.py:268-276). Numbers become exact double
+    literals via repr (shortest round-trip decimal); a ``str`` value is
+    a fragment, so per-row coupon conventions ride along (NTN-C's 2031
+    12% exception, pyield/tpf/titulos/ntnc.py:24-40)."""
     return (
-        f"CASE WHEN `{pay_date}` = to_date(`{maturity}`)"
-        f" THEN {float(final_value)!r}D ELSE {float(coupon_value)!r}D END"
+        f"CASE WHEN {pay_date} = to_date({maturity})"
+        f" THEN {_sql_value(final_value)} ELSE {_sql_value(coupon_value)} END"
     )
 
 
 def amortization_flows(
     df,
-    settlement: str | Column,
-    maturity: str | Column,
+    settlement: str,
+    maturity: str,
     n_amort: int,
     alias: str = "data_pagamento",
     value_alias: str = "valor_amortizacao",
@@ -128,7 +101,7 @@ def amortization_flows(
     amort = _truncar_py(1.0 / n_amort, 8)
     final = 1.0 - amort * (n_amort - 1)
     out = explode_payment_dates(df, settlement, maturity, 1, alias)
-    ven = F.to_date(F.col(maturity) if isinstance(maturity, str) else maturity)
+    ven = F.to_date(F.col(maturity))
     first_pay = F.add_months(ven, -(n_amort - 1))
     return out.filter(F.col(alias) >= first_pay).withColumn(
         value_alias,

@@ -26,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pyield_spark import du as du_mod
-from pyield_spark.bonds.cashflows import coupon_flow_expr, explode_payment_dates
-from pyield_spark.functions.numbers import truncar_expr
+from pyield_spark.bonds.cashflows import coupon_flow_sql, explode_payment_dates
+from pyield_spark.functions.numbers import pround_expr, truncar_expr
+from pyield_spark.functions.sql import ident
 
 VALOR_FACE = 1000.0
 NTNF_CUPOM = 48.80885  # round(1000*((1.10)**0.5 - 1), 5) — ntnf.py:16-25
@@ -118,54 +119,31 @@ def _exploded_flows(
     settlement: str,
     maturity: str,
     taxa: str,
-    coupon_value: float,
-    final_value: float,
+    coupon_value: float | str,
+    final_value: float | str,
 ) -> DataFrame:
-    """Per-bond exploded flows with du, year fraction and discount factor."""
-    from pyield_spark.functions.numbers import truncar_sql_spark
-
+    """Per-bond exploded flows with du, year fraction and discount factor,
+    built from parsed SQL fragments (few py4j round trips per column). A
+    ``str`` coupon or final value is a SQL fragment (NTN-C's per-row
+    2031 exception)."""
     flows = explode_payment_dates(df, settlement, maturity, 6, "data_pagamento")
     flows = du_mod.contar(flows, settlement, "data_pagamento", alias="_du_fluxo")
-    if isinstance(coupon_value, (int, float)) and isinstance(
-        final_value, (int, float)
-    ):
-        # parsed-SQL fast path (r11 build optimization): identical
-        # trees, ~30 py4j round trips instead of ~450. The truncar
-        # string macros stay FLAT (applied to a named column / one
-        # short quotient), per truncar_sql_spark's nesting caveat.
-        from pyield_spark.bonds.cashflows import coupon_flow_sql
-
-        return (
-            flows.withColumn(
-                "_au",
-                F.expr(
-                    truncar_sql_spark(
-                        "CAST(_du_fluxo AS DOUBLE) / 252.0D", 14
-                    )
-                ),
-            )
-            .withColumn(
-                "_cf",
-                F.expr(
-                    coupon_flow_sql(
-                        "data_pagamento", maturity, coupon_value, final_value
-                    )
-                ),
-            )
-            .withColumn(
-                "_fator",
-                F.expr(
-                    f"power(1.0D + {truncar_sql_spark(f'`{taxa}`', 8)}, _au)"
-                ),
-            )
-        )
-    taxa_n = truncar_expr(F.col(taxa), 8)
-    au = anos_uteis_expr("_du_fluxo")
-    cf = coupon_flow_expr("data_pagamento", maturity, coupon_value, final_value)
     return (
-        flows.withColumn("_au", au)
-        .withColumn("_cf", cf)
-        .withColumn("_fator", F.pow(F.lit(1.0) + taxa_n, F.col("_au")))
+        flows.withColumn(
+            "_au", truncar_expr("CAST(_du_fluxo AS DOUBLE) / 252.0D", 14)
+        )
+        .withColumn(
+            "_cf",
+            F.expr(
+                coupon_flow_sql(
+                    "data_pagamento", ident(maturity), coupon_value, final_value
+                )
+            ),
+        )
+        .withColumn(
+            "_fator",
+            F.pow(F.lit(1.0) + truncar_expr(ident(taxa), 8), F.col("_au")),
+        )
     )
 
 
@@ -175,8 +153,8 @@ def price_coupon_bond(
     settlement: str = "data_liquidacao",
     maturity: str = "data_vencimento",
     taxa: str = "taxa",
-    coupon_value: float = NTNF_CUPOM,
-    final_value: float = NTNF_FINAL,
+    coupon_value: float | str = NTNF_CUPOM,
+    final_value: float | str = NTNF_FINAL,
     vp_round: int = 9,
     alias: str = "pu",
     with_duration: bool = False,
@@ -213,15 +191,13 @@ def price_coupon_bond(
         # the product/sum stay exact; only the final quotient returns to
         # double, under a portable round. (Casting arbitrary PRODUCTS to
         # decimal is NOT portable — engines disagree near halfway.)
-        from pyield_spark.functions.numbers import pround_sql_spark
-
         num = (
             "CAST(sum(CAST(_au AS DECIMAL(16,14))"
             f" * CAST(_vp AS DECIMAL(20,{int(vp_round)}))) AS DOUBLE)"
         )
         den = f"CAST(sum(CAST(_vp AS DECIMAL(20,{int(vp_round)}))) AS DOUBLE)"
         aggs.append(
-            F.expr(pround_sql_spark(f"({num}) / ({den})", 9)).alias("duration")
+            pround_expr(f"({num}) / ({den})", 9).alias("duration")
         )
     return flows.groupBy(*id_cols).agg(*aggs)
 
@@ -308,12 +284,12 @@ NTNC_CUPOM = 0.02956301  # 6% a.a. semiannual, base 1 (ntnc.py:24-31)
 NTNC_CUPOM_2031 = 0.05830052  # the 12%-coupon 2031 maturity exception (ntnc.py:31-40)
 
 
-def ntnc_coupon_expr(maturity: str | Column) -> Column:
-    """NTN-C coupon: 6% a.a. except the 2031 maturity's 12%
-    (pyield/tpf/titulos/ntnc.py:24-40)."""
-    m = F.to_date(F.col(maturity) if isinstance(maturity, str) else maturity)
-    return F.when(F.year(m) == 2031, F.lit(NTNC_CUPOM_2031)).otherwise(
-        F.lit(NTNC_CUPOM)
+def ntnc_coupon_sql(maturity: str) -> str:
+    """NTN-C coupon over a maturity SQL fragment: 6% a.a. except the
+    2031 maturity's 12% (pyield/tpf/titulos/ntnc.py:24-40)."""
+    return (
+        f"CASE WHEN year(to_date({maturity})) = 2031"
+        f" THEN {NTNC_CUPOM_2031!r}D ELSE {NTNC_CUPOM!r}D END"
     )
 
 
@@ -325,8 +301,8 @@ def ntnc_cotacao(
     taxa: str = "taxa",
     alias: str = "cotacao",
 ) -> DataFrame:
-    """NTN-C quote factor — per-row coupon convention via Column flows."""
-    coupon = ntnc_coupon_expr(maturity)
+    """NTN-C quote factor — per-row coupon convention as a SQL fragment."""
+    coupon = ntnc_coupon_sql(ident(maturity))
     return price_coupon_bond(
         df,
         id_cols,
@@ -334,7 +310,7 @@ def ntnc_cotacao(
         maturity,
         taxa,
         coupon_value=coupon,
-        final_value=F.lit(1.0) + coupon,
+        final_value=f"1.0D + {coupon}",
         vp_round=12,
         alias=alias,
     )

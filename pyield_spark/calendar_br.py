@@ -24,6 +24,8 @@ O(1)-per-row business-day counts/offsets at any data scale.
 from __future__ import annotations
 
 import datetime as dt
+import uuid
+import weakref
 from functools import lru_cache
 
 # Regime transition: start dates before this use the "antigo" list
@@ -161,6 +163,7 @@ _CAL_SCHEMA = (
 # can be re-allocated to a fresh one, serving plans bound to the dead
 # session (applicationId carries a start timestamp in every master).
 _DF_CACHE: dict = {}
+_SESSION_TOKENS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _session_token(spark) -> tuple[str, str]:
@@ -179,21 +182,14 @@ def _session_token(spark) -> tuple[str, str]:
         ctx = str(sc.applicationId)
     try:
         sess = str(spark._jsparkSession.sessionUUID())
-    except Exception:  # pragma: no cover - Connect / renamed JVM API
+    except Exception:  # Connect / renamed JVM API
         # NOT id(spark): CPython recycles addresses after GC, so a new
         # session could collide with a dead session's key and receive a
-        # frame bound to the dead session (review fix). Stamp a uuid on
-        # the session object instead — stable for its lifetime, never
-        # reused.
-        sess = getattr(spark, "_pyield_session_token", None)
-        if sess is None:
-            import uuid as _uuid
-
-            sess = _uuid.uuid4().hex
-            try:
-                spark._pyield_session_token = sess
-            except Exception:
-                sess = str(id(spark))  # last resort: immutable session obj
+        # frame bound to the dead session (review fix). A weak side
+        # table maps each live session object to a uuid — stable for
+        # its lifetime, never reused, and it needs no attribute on the
+        # session (which may reject assignment).
+        sess = _SESSION_TOKENS.setdefault(spark, uuid.uuid4().hex)
     return ctx, sess
 
 

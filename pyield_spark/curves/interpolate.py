@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pyield_spark.functions.sql import ident
+
 DAYS_PER_YEAR = 252.0
 
 
@@ -109,10 +111,10 @@ def interpolar(
     # chains, a handful of py4j round trips instead of ~1600 — this
     # operator runs in every curve query's build.
     cur = curve.selectExpr(
-        *[f"`{c}`" for c in by_cols],
-        f"CAST(`{curve_du}` AS BIGINT) AS _du",
-        f"CAST(`{curve_rate}` AS DOUBLE) AS _tx",
-        *([f"`{order_col}` AS _ord"] if order_col else []),
+        *[ident(c) for c in by_cols],
+        f"CAST({ident(curve_du)} AS BIGINT) AS _du",
+        f"CAST({ident(curve_rate)} AS DOUBLE) AS _tx",
+        *([f"{ident(order_col)} AS _ord"] if order_col else []),
     ).filter(F.expr("_du IS NOT NULL AND _tx IS NOT NULL AND NOT isnan(_tx)"))
     # dedupe (group, du): keep='last' by order_col when provided
     # (max_by mirrors the reference's arrival-order semantics); else a
@@ -160,9 +162,9 @@ def interpolar(
 
     # ---- union + dual window ----
     tgt = targets.selectExpr(
-        "struct(" + ", ".join(f"`{c}`" for c in targets.columns) + ") AS _l",
-        *[f"`{c}`" for c in by_cols],
-        f"CAST(`{du_col}` AS BIGINT) AS _k",
+        "struct(" + ", ".join(ident(c) for c in targets.columns) + ") AS _l",
+        *[ident(c) for c in by_cols],
+        f"CAST({ident(du_col)} AS BIGINT) AS _k",
         "1 AS _is_left",
     )
     cur_tagged = cur.select(
@@ -196,7 +198,7 @@ def interpolar(
         # over every (fact + curve) row, and its inputs widened the
         # shuffle by three columns (guide §2.3/§2.4). Plan: 3 Window
         # nodes → 2, the exchange carries 5 columns instead of 8.
-        part = ", ".join(f"`{c}`" for c in by_cols)
+        part = ", ".join(ident(c) for c in by_cols)
         frame = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
         joined = unioned.selectExpr(
             "_l",
@@ -395,7 +397,7 @@ def _ladder(
     # NaN → null at the exit (reference: interpolador.py:497)
     taxa = f"CASE WHEN isnan({taxa}) THEN {nulo} ELSE {taxa} END"
 
-    return joined.selectExpr("_l.*", f"{taxa} AS `{alias}`")
+    return joined.selectExpr("_l.*", f"{taxa} AS {ident(alias)}")
 
 
 def _broadcast_brackets(
@@ -423,12 +425,12 @@ def _broadcast_brackets(
     # consumer — checkpoint once (lazy: materializes on first use)
     cur = cur.localCheckpoint(eager=False)
     _part = (
-        "PARTITION BY " + ", ".join(f"`{c}`" for c in by_cols)
+        "PARTITION BY " + ", ".join(ident(c) for c in by_cols)
         if by_cols
         else ""
     )
     iv = cur.selectExpr(
-        *[f"`{c}`" for c in by_cols],
+        *[ident(c) for c in by_cols],
         "_du AS _du_j",
         "_tx AS _tx_j",
         f"lead(_du, 1) OVER ({_part} ORDER BY _du) AS _du_k",
@@ -459,7 +461,7 @@ def _broadcast_brackets(
 
     g = grid_pitch_sql("_du_min", "_du_max", "_n")
     ivb = iv.selectExpr(
-        *[f"`{c}`" for c in by_cols],
+        *[ident(c) for c in by_cols],
         "_du_j",
         "_tx_j",
         "_du_k",
@@ -469,9 +471,9 @@ def _broadcast_brackets(
     )
 
     tgt = targets.selectExpr(
-        "struct(" + ", ".join(f"`{c}`" for c in targets.columns) + ") AS _l",
-        *[f"`{c}`" for c in by_cols],
-        f"CAST(`{du_col}` AS BIGINT) AS _k",
+        "struct(" + ", ".join(ident(c) for c in targets.columns) + ") AS _l",
+        *[ident(c) for c in by_cols],
+        f"CAST({ident(du_col)} AS BIGINT) AS _k",
     )
     # per-group stats by broadcast join (left side untouched); groups
     # absent from the curve get null stats → the ladder's null arm.
@@ -494,7 +496,7 @@ def _broadcast_brackets(
     # above-max targets clamp into the last, open-ended interval
     tgt = tgt.selectExpr(
         "_l",
-        *[f"`{c}`" for c in by_cols],
+        *[ident(c) for c in by_cols],
         "_k",
         "_du_min",
         "_du_max",
@@ -505,7 +507,7 @@ def _broadcast_brackets(
     )
 
     ivbs = ivb.selectExpr(
-        *[f"`{c}` AS `_r_{c}`" for c in by_cols],
+        *[f"{ident(c)} AS {ident('_r_' + c)}" for c in by_cols],
         "_rbkt", "_du_j", "_tx_j", "_du_k", "_tx_k",
     )
     cond_sql = (
@@ -513,7 +515,7 @@ def _broadcast_brackets(
         " AND (_du_k IS NULL OR _k < _du_k)"
     )
     for c in by_cols:
-        cond_sql += f" AND `{c}` <=> `_r_{c}`"
+        cond_sql += f" AND {ident(c)} <=> {ident('_r_' + c)}"
     out = tgt.join(F.broadcast(ivbs), F.expr(cond_sql), "left")
     return out.selectExpr(
         "_l",

@@ -26,6 +26,7 @@ import datetime as dt
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pyield_spark import calendar_br as cal
+from pyield_spark.functions.sql import ident
 
 _TRANSITION = cal.TRANSITION_DATE
 
@@ -74,7 +75,7 @@ def _to_date_col(x: str | Column) -> Column:
     # parsed to_date over a NAMED column in one round trip; Column
     # inputs keep the (already-built) Column path
     if isinstance(x, str):
-        return F.expr(f"to_date(`{x}`)")
+        return F.expr(f"to_date({ident(x)})")
     return F.to_date(x)
 
 
@@ -131,7 +132,7 @@ def deslocar(
     if isinstance(deslocamento, int):
         n = F.expr(f"CAST({deslocamento} AS BIGINT)")
     elif isinstance(deslocamento, str):
-        n = F.expr(f"CAST(`{deslocamento}` AS BIGINT)")
+        n = F.expr(f"CAST({ident(deslocamento)} AS BIGINT)")
     else:
         n = deslocamento.cast("long")
     # forward-roll ordinal IS cum_* (own ordinal if a bd, next bd's

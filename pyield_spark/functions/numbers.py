@@ -64,16 +64,27 @@ def truncar_expr(col: Column | str, decimals: int) -> Column:
     re-reference the child and grow nested trunc chains 4× per level —
     measured as the dominant planning+eval cost in the composite
     pricing queries).
+
+    A ``str`` is a SQL fragment and builds the same tree in one parse
+    (the CASE branches coerce bigint→double exactly as when/otherwise
+    does).
     """
     if decimals < 0:
         raise ValueError("decimals must be non-negative")
-    c = F.col(col) if isinstance(col, str) else col
+    if isinstance(col, str):
+        s = f"{float(10 ** decimals)!r}D"
+        y = f"(abs({col}) * {s})"
+        k = f"(rint({y}) + 0.0D)"
+        return F.expr(
+            f"signum({col}) * (CASE WHEN {k} / {s} = abs({col})"
+            f" THEN {k} ELSE CAST(floor({y}) AS DOUBLE) END) / {s}"
+        )
     s = F.lit(float(10**decimals))
-    a = F.abs(c)
+    a = F.abs(col)
     y = a * s
     k = rint0_expr(y)  # exact-integer compare below disambiguates
     t = F.when(k / s == a, k).otherwise(F.floor(y))
-    return F.signum(c) * t / s
+    return F.signum(col) * t / s
 
 
 def pround_expr(col: Column | str, decimals: int) -> Column:
@@ -85,13 +96,16 @@ def pround_expr(col: Column | str, decimals: int) -> Column:
     binary; the two disagree when the repr shows an exact halfway digit
     the binary value sits just under (observed flipping a DV01 at
     sf0.1). This formula is the same IEEE ops on both sides —
-    bit-identical by construction. NaN/null pass through.
+    bit-identical by construction. NaN/null pass through. A ``str`` is
+    a SQL fragment and builds the same tree in one parse.
     """
     if decimals < 0:
         raise ValueError("decimals must be non-negative")
-    c = F.col(col) if isinstance(col, str) else col
+    if isinstance(col, str):
+        s = f"{float(10 ** decimals)!r}D"
+        return F.expr(f"signum({col}) * floor(abs({col}) * {s} + 0.5D) / {s}")
     s = F.lit(float(10**decimals))
-    return F.signum(c) * F.floor(F.abs(c) * s + F.lit(0.5)) / s
+    return F.signum(col) * F.floor(F.abs(col) * s + F.lit(0.5)) / s
 
 
 def trunc_decimal_sum_expr(sum_col: Column, decimals: int = 6) -> Column:
@@ -135,62 +149,16 @@ def round_pl_expr(col: Column | str, decimals: int) -> Column:
     rounds y's exact value half-to-even (bit-identical to
     ``F.bround(y, 0)``, see its docstring — but codegen arithmetic,
     not a per-row BigDecimal), which equals Rust's round_ties_even,
-    and the final divide is the same f64 op Polars performs.
+    and the final divide is the same f64 op Polars performs. A ``str``
+    is a SQL fragment and builds the same tree in one parse.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    if decimals < 0:
+        raise ValueError("decimals must be non-negative")
+    if isinstance(col, str):
+        s = f"{float(10 ** decimals)!r}D"
+        return F.expr(f"(rint(({col}) * {s}) + 0.0D) / {s}")
     s = F.lit(float(10**decimals))
-    return rint0_expr(c * s) / s
-
-
-def round_pl_sql(col_sql: str, decimals: int) -> str:
-    """Spark-SQL-string twin of :func:`round_pl_expr` — identical
-    expression tree ((rint(x·10^d) + 0.0D)/10^d, double arithmetic
-    throughout via the D-suffixed literals) built in ONE py4j round
-    trip instead of ~10. For plan-build hot paths (the 10-column
-    percent conversion cost ~0.5 s of q_futuro_panel's cold build);
-    equivalence pinned in tests/test_numeric_properties.py."""
-    if decimals < 0:
-        raise ValueError("decimals must be non-negative")
-    s = f"{float(10 ** decimals)!r}D"
-    return f"(rint(({col_sql}) * {s}) + 0.0D) / {s}"
-
-
-def truncar_sql_spark(col_sql: str, decimals: int) -> str:
-    """Spark-SQL-string twin of :func:`truncar_expr` — the identical
-    decimal-repr-aware truncation tree (rint grid check, floor
-    fallback, signum pass-through) built in ONE py4j round trip instead
-    of ~15. The CASE branches coerce bigint→double exactly as the
-    Column form's when/otherwise does. Use it ONLY for FLAT
-    applications over a NAMED COLUMN: the string interpolates its input
-    ~5×, so NESTING string twins expands the text combinatorially and
-    builds a LARGER JVM tree than the Column form (whose py4j objects
-    share children as a DAG) — measured on q_leiloes's double-trunc
-    chains, where the string form was ~35% SLOWER to plan than the
-    Column form it replaced (and was reverted). The Column macros stay
-    the right tool for nested chains; this twin is for wide flat
-    selects (the futuro_pr_frame case). Equivalence pinned in
-    tests/test_functions.py."""
-    if decimals < 0:
-        raise ValueError("decimals must be non-negative")
-    s = f"{float(10 ** decimals)!r}D"
-    y = f"(abs({col_sql}) * {s})"
-    k = f"(rint({y}) + 0.0D)"
-    return (
-        f"signum({col_sql}) * (CASE WHEN {k} / {s} = abs({col_sql})"
-        f" THEN {k} ELSE CAST(floor({y}) AS DOUBLE) END) / {s}"
-    )
-
-
-def pround_sql_spark(col_sql: str, decimals: int) -> str:
-    """Spark-SQL-string twin of :func:`pround_expr` (portable
-    half-away): sign(x)·floor(|x|·10^d + 0.5)/10^d with double
-    literals — same IEEE ops, one round trip."""
-    if decimals < 0:
-        raise ValueError("decimals must be non-negative")
-    s = f"{float(10 ** decimals)!r}D"
-    return (
-        f"signum({col_sql}) * floor(abs({col_sql}) * {s} + 0.5D) / {s}"
-    )
+    return rint0_expr(col * s) / s
 
 
 def br_num_expr(col: Column | str) -> Column:

@@ -489,24 +489,14 @@ def asof_join(
     return out.select(*left_cols, *[F.col(f"_m.{v}").alias(v) for v in values])
 
 
-def grid_pitch_expr(mn, mx, n):
-    """Bucket pitch ≈ span/(n-1) for the broadcast interval routes:
-    guarantees the total exploded interval rows stay O(n) for ANY key
-    distribution (Σ interval_len/g + n ≈ 2n). Shared by the as-of and
-    interpolation broadcast routes so their bucket math cannot drift
-    apart; both sides of each join derive it from the same broadcast
-    1-row stats, so float rounding is identical by construction."""
-    return F.when(
-        mx > mn,
-        (mx - mn).cast("double") / F.greatest(n - 1, F.lit(1)),
-    ).otherwise(F.lit(1.0))
-
-
 def grid_pitch_sql(mn: str, mx: str, n: str) -> str:
-    """SQL-string twin of :func:`grid_pitch_expr` over named columns —
-    the identical CaseWhen tree, one parse (r11 build optimization).
-    Keep the two in lockstep: both sides of each bucket join must
-    derive the pitch from the same formula."""
+    """Bucket pitch ≈ span/(n-1) over SQL fragments, for the broadcast
+    interval routes: guarantees the total exploded interval rows stay
+    O(n) for ANY key distribution (Σ interval_len/g + n ≈ 2n). Shared
+    by the as-of and interpolation broadcast routes so their bucket
+    math cannot drift apart; both sides of each join derive it from the
+    same broadcast 1-row stats, so float rounding is identical by
+    construction."""
     return (
         f"CASE WHEN {mx} > {mn}"
         f" THEN CAST({mx} - {mn} AS DOUBLE) / greatest({n} - 1, 1)"
@@ -660,7 +650,7 @@ def _asof_broadcast(
     # broadcast on both sides (pure column math, no Python-side
     # collect), so the two bucket computations can never disagree
     iv = _nullsafe_join(iv, stats)
-    g = grid_pitch_expr(F.col("_mn"), F.col("_mx"), F.col("_n"))
+    g = F.expr(grid_pitch_sql("_mn", "_mx", "_n"))
     b_lo = F.floor(F.coalesce(F.col("_start"), F.col("_end")) / g)
     b_hi = F.floor(F.coalesce(F.col("_end"), F.col("_start")) / g)
     ivs = iv.select(
@@ -680,7 +670,7 @@ def _asof_broadcast(
         stats,
         how="left",  # groups absent from the series still keep their rows
     )
-    g_l = grid_pitch_expr(F.col("_mn"), F.col("_mx"), F.col("_n"))
+    g_l = F.expr(grid_pitch_sql("_mn", "_mx", "_n"))
     raw_bkt = F.floor(F.col("_kn") / g_l)
     if strategy == "backward":
         # targets above the last key still match the last (unbounded)

@@ -144,7 +144,7 @@ def connected_components(
 
     for it in range(max_iter):
         # EAGER checkpoint, deliberately: an r10-optimization A/B
-        # (profile_queries.py) measured the "obvious" fuse — lazy
+        # measured the "obvious" fuse — lazy
         # checkpoint materialized by the checksum job — at 2.8×
         # SLOWER on q_dedup_clusters (cold 2.6 s → 7.4 s) because the
         # un-persisted round output gets recomputed by the next

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from pyield_spark.functions.sql import ident
 from pyield_spark.operators.similarity import _as_double, dot_dec, norm_sq_dec
 
 
@@ -251,7 +252,7 @@ def kmeans_assign(
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
     base = emb.select(
-        F.col(id_col).alias("_vid"), _as_double(f"`{vec_col}`").alias("_v")
+        F.col(id_col).alias("_vid"), _as_double(ident(vec_col)).alias("_v")
     )
     # seed centroids: the k lowest-id vectors — a bounded k-row collect
     # (TakeOrdered, no full sort)

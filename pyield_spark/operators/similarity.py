@@ -23,25 +23,21 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-
-# The fold helpers below accept Column | str. A str argument is a SQL
-# fragment (usually a column name) and builds the IDENTICAL expression
-# tree through one F.expr parse instead of ~10-20 py4j round trips per
-# call (r11, the 860e84d/round_pl_sql recipe — these helpers appear in
-# every ANN query's build, ~0.5 s of py4j per affected query at
-# dim=64). Same ops, same fold order, bit-identical values; the twins
-# are flat (each input interpolated once), so the string form never
-# expands combinatorially (see numbers.truncar_sql_spark's warning).
+from pyield_spark.functions.sql import ident
 
 
-def _as_double_sql(vec_sql: str) -> str:
-    return f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
+# The fold helpers below take SQL fragments (usually an internal column
+# name; a user-supplied name goes through ``ident``) and build their
+# expression in ONE F.expr parse instead of ~10-20 py4j round trips per
+# call — they appear in every ANN query's build.
 
 
-def _as_double(vec: Column | str) -> Column:
-    if isinstance(vec, str):
-        return F.expr(_as_double_sql(vec))
-    return F.transform(vec, lambda x: x.cast("double"))
+def _as_double_sql(vec: str) -> str:
+    return f"transform({vec}, x -> CAST(x AS DOUBLE))"
+
+
+def _as_double(vec: str) -> Column:
+    return F.expr(_as_double_sql(vec))
 
 
 # Array folds evaluate LEFT-TO-RIGHT in both Spark (aggregate) and
@@ -52,40 +48,18 @@ def _as_double(vec: Column | str) -> Column:
 # interpreted higher-order-function path.
 
 
-def norm_sq_sql(vec_sql: str) -> str:
-    return (
-        f"aggregate({_as_double_sql(vec_sql)}, 0.0D,"
-        " (acc, x) -> acc + x * x)"
-    )
-
-
-def norm_sq_dec(vec: Column | str) -> Column:
+def norm_sq_dec(vec: str) -> Column:
     """Σx² — sequential double fold (deterministic order)."""
-    if isinstance(vec, str):
-        return F.expr(norm_sq_sql(vec))
-    return F.aggregate(
-        _as_double(vec),
-        F.lit(0.0),
-        lambda acc, x: acc + x * x,
+    return F.expr(
+        f"aggregate({_as_double_sql(vec)}, 0.0D, (acc, x) -> acc + x * x)"
     )
 
 
-def dot_sql(a_sql: str, b_sql: str) -> str:
-    return (
-        f"aggregate(zip_with({_as_double_sql(a_sql)},"
-        f" {_as_double_sql(b_sql)}, (x, y) -> x * y), 0.0D,"
-        " (acc, x) -> acc + x)"
-    )
-
-
-def dot_dec(a: Column | str, b: Column | str) -> Column:
+def dot_dec(a: str, b: str) -> Column:
     """Σaᵢbᵢ — sequential double fold over zipped arrays."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return F.expr(
+        f"aggregate(zip_with({_as_double_sql(a)}, {_as_double_sql(b)},"
+        " (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
     )
 
 
@@ -104,7 +78,7 @@ def cosine_topk(
     from pyspark.sql import Window
 
     base = emb.select(
-        F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vec")
+        F.col(id_col).alias("_vid"), F.col(ident(vec_col)).alias("_vec")
     ).withColumn("_norm2", norm_sq_dec("_vec"))
     queries = base.filter(
         query_pred if query_pred is not None else (F.col("_vid") % 100 == 0)
@@ -142,13 +116,15 @@ def cosine_topk(
     )
 
 
-def lsh_bucket_expr(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
+def lsh_bucket_expr(vec: str, n_planes: int = 8, dim: int = 64) -> Column:
     """Sign-LSH bucket id from deterministic pseudo-hyperplanes.
 
     Plane p weights component i by w(p,i) = ((1299721·p + 104729·i)
     mod 97) − 48 (a fixed, portable integer family ≈ centered uniform).
     Bucket = Σ_p 2^p·[⟨w_p, v⟩ > 0]. Same formula is expressible in the
     SQL oracle; at scale, equi-join on the bucket id prunes candidates.
+    ``vec`` is a SQL fragment (a user column name goes through
+    ``ident``).
     """
     v = _as_double(vec)
     bucket = F.lit(0).cast("long")
@@ -287,7 +263,7 @@ def train_codebooks(
     base = (
         emb.select(
             F.col(id_col).alias("_vid"),
-            _as_double(f"`{vec_col}`").alias("_vec"),
+            _as_double(ident(vec_col)).alias("_vec"),
         )
         .filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
         .filter(~F.exists("_vec", lambda x: F.isnan(x) | x.isNull()))
@@ -422,7 +398,7 @@ def _ivf_nearest_lists(
     from pyield_spark.functions.numbers import pround_expr
 
     score = pround_expr(
-        dot_dec(f"`{vec_col}`", "_cvec")
+        dot_dec(ident(vec_col), "_cvec")
         / (F.sqrt(F.col(norm_col)) * F.sqrt(F.col("_cnorm2"))),
         6,
     )
@@ -431,7 +407,7 @@ def _ivf_nearest_lists(
     )
     out = frame.crossJoin(F.broadcast(cents)).withColumn("_cscore", score)
     if keep_dot is not None:
-        out = out.withColumn(keep_dot, dot_dec(f"`{vec_col}`", "_cvec"))
+        out = out.withColumn(keep_dot, dot_dec(ident(vec_col), "_cvec"))
     return (
         out.withColumn("_crn", F.row_number().over(w))
         .filter(F.col("_crn") <= n)
@@ -486,7 +462,7 @@ def ivf_topk(
 
     base = emb.select(
         F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_vec"),
+        F.col(ident(vec_col)).alias("_vec"),
         *([] if candidate_pred is None else [candidate_pred.alias("_cand")]),
     ).withColumn("_norm2", norm_sq_dec("_vec"))
 
@@ -724,7 +700,7 @@ def pq_encode(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
     base = emb.select(
-        F.col(id_col).alias("_vid"), _as_double(f"`{vec_col}`").alias("_vec")
+        F.col(id_col).alias("_vid"), _as_double(ident(vec_col)).alias("_vec")
     ).filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
     # ^ null / wrong-length embeddings are DROPPED from the index (they
     # cannot be quantized or served; np.stack on a ragged batch would
@@ -945,7 +921,7 @@ def ivfpq_topk(
     base = (
         emb.select(
             F.col(id_col).alias("_vid"),
-            _as_double(f"`{vec_col}`").alias("_vec"),
+            _as_double(ident(vec_col)).alias("_vec"),
         )
         # same invalid-vector predicate as pq_encode — codebooks built
         # here (e2e mode) must match the ones a prebuilt index embeds
@@ -1255,7 +1231,7 @@ def _sq_base(
     with a NaN/null component are dropped (NaN cannot quantize)."""
     return (
         emb.select(
-            F.col(id_col).alias("_vid"), _as_double(f"`{vec_col}`").alias("_vec")
+            F.col(id_col).alias("_vid"), _as_double(ident(vec_col)).alias("_vec")
         )
         .filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
         # parsed-SQL twin of ~F.exists(..., isnan | isNull) — same tree
@@ -1283,43 +1259,16 @@ def ivf_assign(index: DataFrame, n_centroids: int) -> DataFrame:
     # codebook size fails at plan build (review fix)
 
 
-def sq8_quant_expr(
-    vec: Column, mn: Column, mx: Column, clamp: bool = False,
-    levels: int = 255,
-) -> Column:
-    """``q_d = floor((x_d − mn_d) / (mx_d − mn_d) · levels + 0.5)``
-    (0 on a degenerate span); ``levels = 2^bits − 1`` (255 for QT_8bit,
-    15 for QT_4bit). ``clamp=True`` pins codes to [0, levels] — a
-    no-op when x sits inside the trained span, REQUIRED when encoding
-    a new batch against FROZEN stats (``sq8_index_add``), where an
-    out-of-span value would otherwise produce an out-of-domain code."""
-
-    def q(x, s):
-        raw = F.floor(
-            (x - s["mn"]) / (s["mx"] - s["mn"]) * F.lit(float(levels))
-            + F.lit(0.5)
-        ).cast("int")
-        if clamp:
-            raw = F.greatest(F.lit(0), F.least(F.lit(levels), raw))
-        return F.when(s["mx"] == s["mn"], F.lit(0)).otherwise(raw)
-
-    return F.zip_with(
-        vec,
-        F.zip_with(
-            mn, mx, lambda a, b: F.struct(a.alias("mn"), b.alias("mx"))
-        ),
-        q,
-    )
-
-
 def sq8_quant_sql(
     vec: str, mn: str, mx: str, clamp: bool = False, levels: int = 255
 ) -> str:
-    """Parsed-SQL twin of :func:`sq8_quant_expr` over SQL fragments —
-    identical tree (same zip_with/struct/CASE/floor shape, D-suffixed
-    double literals), ONE py4j parse instead of ~30 lambda round trips
-    (r11 build-wall cut; each input interpolated once, so no
-    combinatorial expansion)."""
+    """``q_d = floor((x_d − mn_d) / (mx_d − mn_d) · levels + 0.5)``
+    (0 on a degenerate span) over SQL fragments; ``levels = 2^bits −
+    1`` (255 for QT_8bit, 15 for QT_4bit). ``clamp=True`` pins codes to
+    [0, levels] — a no-op when x sits inside the trained span, REQUIRED
+    when encoding a new batch against FROZEN stats (``sq8_index_add``),
+    where an out-of-span value would otherwise produce an out-of-domain
+    code."""
     lv = f"{float(levels)!r}D"
     raw = f"CAST(floor((x - s.mn) / (s.mx - s.mn) * {lv} + 0.5D) AS INT)"
     if clamp:
@@ -1443,9 +1392,10 @@ def sq8_index_add(
         enc = batch.crossJoin(
             F.broadcast(index.select("_mn", "_mx").limit(1))
         )
-        code = sq8_quant_expr(
-            F.col("_vec"), F.col("_mn"), F.col("_mx"), clamp=True,
-            levels=(1 << bits) - 1,
+        code = F.expr(
+            sq8_quant_sql(
+                "_vec", "_mn", "_mx", clamp=True, levels=(1 << bits) - 1
+            )
         )
         out = enc.select(
             "_vid", "_vec", "_norm2", code.alias("_codes"), "_mn", "_mx"
@@ -1484,27 +1434,12 @@ def _check_index_meta(frame: DataFrame, col: str, key: str, want, what: str):
         )
 
 
-def sq8_dequant_expr(
-    codes: Column, mn: Column, mx: Column, levels: int = 255
-) -> Column:
-    """``x̂_d = mn_d + (q_d · (mx_d − mn_d)) / levels`` — the
-    dequantized corpus vector the asymmetric SQ scorer reads
-    (``levels = 2^bits − 1``). Fixed IEEE op order, replayed exactly
-    in the DuckDB oracles; shared by ``sq8_topk`` and
-    ``hybrid_rrf(route="ivf_sq8")``."""
-    return F.zip_with(
-        codes,
-        F.zip_with(
-            mn, mx, lambda a, b: F.struct(a.alias("mn"), b.alias("mx"))
-        ),
-        lambda q, s: s["mn"]
-        + (q.cast("double") * (s["mx"] - s["mn"])) / F.lit(float(levels)),
-    )
-
-
 def sq8_dequant_sql(codes: str, mn: str, mx: str, levels: int = 255) -> str:
-    """Parsed-SQL twin of :func:`sq8_dequant_expr` — identical tree,
-    one parse (see :func:`sq8_quant_sql`)."""
+    """``x̂_d = mn_d + (q_d · (mx_d − mn_d)) / levels`` over SQL
+    fragments — the dequantized corpus vector the asymmetric SQ scorer
+    reads (``levels = 2^bits − 1``). Fixed IEEE op order, replayed
+    exactly in the DuckDB oracles; shared by ``sq8_topk``,
+    ``hybrid_rrf(route="ivf_sq8")`` and the vocab coverage scorer."""
     lv = f"{float(levels)!r}D"
     return (
         f"zip_with({codes}, zip_with({mn}, {mx},"
@@ -1733,7 +1668,7 @@ def hard_negatives(
     base = emb.select(
         F.col(id_col).alias("_vid"),
         F.col(label_col).cast("int").alias("_lbl"),
-        F.col(vec_col).alias("_vec"),
+        F.col(ident(vec_col)).alias("_vec"),
     ).withColumn("_norm2", norm_sq_dec("_vec"))
     probes = (base.filter(query_pred) if query_pred is not None else base).select(
         F.col("_vid").alias("query_id"),
@@ -1858,7 +1793,7 @@ def mmr_rerank(
         else cosine_topk(emb, id_col, vec_col, query_pred, k=shortlist_n)
     )
     base = emb.select(
-        F.col(id_col).alias("_bid"), _as_double(f"`{vec_col}`").alias("_bvec")
+        F.col(id_col).alias("_bid"), _as_double(ident(vec_col)).alias("_bvec")
     )
     cand = (
         short.select("query_id", "neighbor_id", F.col("cosine").alias("relevance"))
@@ -1897,8 +1832,12 @@ def mmr_rerank(
         # - null guard (r10 advice): a NULL vector element arrives as
         #   None and maps to NaN (np.float64 cast), mirroring SQL
         #   null-in-arithmetic → the cosine goes NaN instead of the
-        #   whole query dying on float(None)
+        #   whole query dying on float(None). A NULL vector, or one
+        #   whose length differs from the group's d (the most common
+        #   length, ties to the longer), maps to all-NaN the same way
+        #   instead of failing the ragged np.array build.
         import math
+        from collections import Counter
 
         import numpy as np
         import pandas as pd
@@ -1917,9 +1856,10 @@ def mmr_rerank(
         rels = [float(r) for r in pdf["relevance"]]
         raw = pdf["_bvec"].tolist()
         n = len(ids)
-        d = next((len(v) for v in raw if v is not None), 0)
+        lens = Counter(len(v) for v in raw if v is not None)
+        d = max(lens.items(), key=lambda kv: (kv[1], kv[0]))[0] if lens else 0
         V = np.array(
-            [v if v is not None else [None] * d for v in raw],
+            [v if v is not None and len(v) == d else [None] * d for v in raw],
             dtype=np.float64,
         )
         norm2 = np.zeros(n)
@@ -1983,22 +1923,17 @@ def mmr_rerank(
 RP_OUT_DIM = 16
 
 
-def _rp_weight(p: int, i) -> Column:
-    """Portable pseudo-random projection weight w(p,i) = ((2750161·p +
-    611953·i) mod 101) − 50 — a fixed integer family ≈ centered uniform
-    on [−50, 50] (the sign-LSH plane recipe with distinct primes, so
-    the two families stay uncorrelated). Any engine replays it
-    exactly; JL only needs a sub-gaussian family, not true
-    randomness."""
-    return (((F.lit(2750161 * p) + F.lit(611953) * i) % 101) - 50).cast("double")
-
-
-def rp_project_expr(vec: Column, out_dim: int = RP_OUT_DIM, in_dim: int = 64) -> Column:
+def rp_project_expr(vec: str, out_dim: int = RP_OUT_DIM, in_dim: int = 64) -> Column:
     """Project to ``out_dim`` dims: y_p = Σ_i x_i·w(p,i), sequential
     fold in ascending i (the order is part of the cross-engine
-    contract). Map-only — persist the projected corpus once (the
+    contract). w(p,i) = ((2750161·p + 611953·i) mod 101) − 50 is a
+    fixed integer family ≈ centered uniform on [−50, 50] (the sign-LSH
+    recipe with distinct primes, so the two families stay
+    uncorrelated); any engine replays it exactly, and JL only needs a
+    sub-gaussian family. Map-only — persist the projected corpus once (the
     ingest half) and the serve scan reads out_dim/in_dim of the
-    floats."""
+    floats. ``vec`` is a SQL fragment (a user column name goes through
+    ``ident``)."""
     v = _as_double(vec)
     # r10 optimization: the weight family is a deterministic integer
     # formula, so the whole out_dim×in_dim matrix is computed in Python
@@ -2062,8 +1997,8 @@ def rp_topk(
     else:
         base = emb.select(
             F.col(id_col).alias("_vid"),
-            F.col(vec_col).alias("_vec"),
-            rp_project_expr(F.col(vec_col), out_dim, in_dim).alias("_rvec"),
+            F.col(ident(vec_col)).alias("_vec"),
+            rp_project_expr(ident(vec_col), out_dim, in_dim).alias("_rvec"),
         ).withColumn("_rnorm2", norm_sq_dec("_rvec"))
     queries = base.filter(
         query_pred if query_pred is not None else (F.col("_vid") % 100 == 0)
@@ -2094,7 +2029,7 @@ def rp_topk(
         .filter(F.col("_rr") <= refine)
     )
     exact_side = emb.select(
-        F.col(id_col).alias("_vid"), F.col(vec_col).alias("_evec")
+        F.col(id_col).alias("_vid"), F.col(ident(vec_col)).alias("_evec")
     ).withColumn("_enorm2", norm_sq_dec("_evec"))
     qexact = queries.select(
         "query_id", F.col("_qvec").alias("_qevec")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyield_spark.functions.sql import ident
 from pyield_spark.operators import text as tx
 
 
@@ -432,7 +433,7 @@ def hybrid_rrf(
     ).localCheckpoint(eager=False)  # ≤ k_each rows; reused by seed + fusion
 
     base = emb.select(
-        F.col(vec_id).alias("_vid"), _as_double(f"`{vec_col}`").alias("_v")
+        F.col(vec_id).alias("_vid"), _as_double(ident(vec_col)).alias("_v")
     ).filter(F.col("_v").isNotNull() & (F.size("_v") == dim))
     seeds = bmrank.filter(F.col("r_bm25") <= n_seed).join(
         base, bmrank._id == base._vid
@@ -465,7 +466,7 @@ def hybrid_rrf(
         # the one scoring expression every route ends in — identical
         # op order keeps the exhaustive-config parity bit-exact
         return pround_expr(
-            dot_dec(f"`{vec}`", "_c")
+            dot_dec(ident(vec), "_c")
             / (F.sqrt(F.col(n2)) * F.sqrt(F.col("_cn2"))),
             6,
         )

@@ -1223,15 +1223,10 @@ def q_futuro_panel(spark, sf_dir):
     # widen: the whole enrichment (ticker dissection, 4 calendar joins,
     # 10 scaled-round percent conversions) is narrow work before the
     # first exchange — serial on a single-row-group scan without it
-    from pyield_spark.functions.numbers import pround_sql_spark
+    from pyield_spark.functions.numbers import pround_expr
 
     od = tables(spark, sf_dir, "orders", widen=True)
     out = enriquecer(futuro_pr_frame(od), "DI1")
-    return out.selectExpr(
-        *[
-            f"{pround_sql_spark(c, 6)} AS {c}"
-            if c in ("dv01", "taxa_forward")
-            else c
-            for c in out.columns
-        ]
+    return out.withColumns(
+        {c: pround_expr(c, 6) for c in ("dv01", "taxa_forward")}
     )

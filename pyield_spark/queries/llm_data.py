@@ -424,7 +424,7 @@ def q_lsh_buckets(spark, sf_dir):
     return emb.select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
-        sim.lsh_bucket_expr(F.col("embedding"), n_planes=8, dim=64).alias("bucket"),
+        sim.lsh_bucket_expr("embedding", n_planes=8, dim=64).alias("bucket"),
     )
 
 
@@ -568,7 +568,7 @@ def q_embedding_neardup(spark, sf_dir):
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     bucketed = base.withColumn(
-        "bucket", lsh_bucket_expr(F.col("v"), n_planes=8, dim=64)
+        "bucket", lsh_bucket_expr("v", n_planes=8, dim=64)
     ).withColumn("norm2", norm_sq_dec("v"))
     a = bucketed.select(
         F.col("vec_id").alias("id_a"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyield_spark.functions.dates import converter_datas_expr
 from pyield_spark.functions.numbers import br_num_expr, round_pl_expr
+from pyield_spark.functions.sql import ident
 
 
 def read_holidays_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -157,7 +158,7 @@ def anbima_silver(bronze: DataFrame) -> DataFrame:
     for src, dst in rename.items():
         if has(src) and dst not in seen:
             seen.add(dst)
-            selected.append(F.col(f"`{cols[src]}`").alias(dst))
+            selected.append(F.col(ident(cols[src])).alias(dst))
     out = out.select(*selected) if selected else out
     casts = {}
     for c, t in [

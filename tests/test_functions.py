@@ -147,57 +147,97 @@ def test_vna_projetado_scalar_domain():
     assert vna_projetado(d, 4000.0, 0.5) > 4000.0
 
 
-def test_raw_maturity_sql_twin(spark):
-    """The one-round-trip SQL string builds the SAME maturity as the
-    Column form on valid, lowercase, malformed and short tickers
-    (plan-build lever, futuro.py::raw_maturity_sql)."""
+def test_raw_maturity_sql_values(spark):
+    """Ticker → unrolled maturity on valid, lowercase, malformed and
+    short tickers: every month letter position decodes, and an invalid
+    month (A, E), a non-digit year (2X), a short ticker, '' and NULL
+    all give NULL on any session."""
     from pyspark.sql import functions as F
 
-    from pyield_spark.analytics.futuro import raw_maturity_expr, raw_maturity_sql
+    from pyield_spark.analytics.futuro import raw_maturity_sql
 
+    want_month_year = {
+        "DI1F26": (2026, 1), "di1x31": (2031, 11), "DAPK27": (2027, 5),
+        "DI1A25": None, "DI1F2X": None, "DI1": None, "": None, None: None,
+        "DI1Q00": (2000, 8), "DI1G30": (2030, 2), "DI1Z29": (2029, 12),
+        "DI1E25": None,
+    }
+    df = spark.createDataFrame([(t,) for t in want_month_year], "t string")
+    for contrato, day in (("DI1", 1), ("DAP", 15)):
+        got = {
+            r["t"]: r["m"]
+            for r in df.select(
+                "t", F.expr(raw_maturity_sql("t", contrato)).alias("m")
+            ).collect()
+        }
+        want = {
+            t: dt.date(ym[0], ym[1], day) if ym else None
+            for t, ym in want_month_year.items()
+        }
+        assert got == want, contrato
+
+
+def test_round_pl_pround_truncar_values(spark):
+    """round_pl_expr / pround_expr / truncar_expr on a grid-adversarial
+    sample, pinned to fixed values through both input forms: a Column
+    and a SQL fragment (one parse). The exact doubles differ from naive
+    decimal division, so the D-suffixed literals are load-bearing."""
+    from pyspark.sql import functions as F
+
+    from pyield_spark.functions.numbers import pround_expr, round_pl_expr
+
+    nan, inf = float("nan"), float("inf")
+    # (x, round_pl(x/100, 10), pround(x, 6), truncar(x, 8),
+    #  truncar(truncar(x, 8), 8)) — a list, since 0.0 == -0.0 as keys
+    want = [
+        (0.141446, 0.00141446, 0.141446, 0.141446, 0.141446),
+        (-0.141446, -0.00141446, -0.141446, -0.141446, -0.141446),
+        (808563725.6850001, 8085637.25685, 808563725.685, 808563725.685,
+         808563725.685),
+        (80856372568.49998, 808563725.6849998, 80856372568.49998,
+         80856372568.49998, 80856372568.49998),
+        (2.5, 0.025, 2.5, 2.5, 2.5),
+        (-2.5, -0.025, -2.5, -2.5, -2.5),
+        (0.105, 0.00105, 0.105, 0.105, 0.105),
+        (-0.105, -0.00105, -0.105, -0.105, -0.105),
+        (1e-12, 0.0, 0.0, 0.0, 0.0),
+        (0.0, 0.0, 0.0, 0.0, 0.0),
+        (-0.0, 0.0, -0.0, -0.0, -0.0),  # rint's -0.0 normalized by + 0.0
+        (nan, nan, nan, nan, nan),
+        # Spark's floor returns BIGINT, so pround saturates +inf at
+        # Long.MAX_VALUE / 1e6; truncar keeps inf through its rint arm
+        (inf, inf, 9223372036854.775, inf, inf),
+        (123.456789, 1.23456789, 123.456789, 123.456789, 123.456789),
+        (0.1234565, 0.001234565, 0.123457, 0.1234565, 0.1234565),
+        (-1.0000004999, -0.010000005, -1.0, -1.00000049, -1.00000049),
+        (3.14159265358979, 0.0314159265, 3.141593, 3.14159265, 3.14159265),
+        (None, None, None, None, None),
+    ]
     df = spark.createDataFrame(
-        [("DI1F26",), ("di1x31",), ("DAPK27",), ("DI1A25",), ("DI1F2X",),
-         ("DI1",), ("",), (None,), ("DI1Q00",)],
-        "t string",
+        [(i, row[0]) for i, row in enumerate(want)], "i int, x double"
     )
-    for contrato in ("DI1", "DAP"):
-        both = df.select(
-            raw_maturity_expr("t", contrato).alias("col_form"),
-            F.expr(raw_maturity_sql("t", contrato)).alias("sql_form"),
-        ).collect()
-        for r in both:
-            assert r["col_form"] == r["sql_form"], (contrato, r)
-
-
-def test_round_pl_sql_and_pround_sql_spark_twins(spark):
-    """SQL-string twins are value-identical to the Column forms on a
-    grid-adversarial sample (the exact doubles differ from naive
-    decimal division — D-suffixed literals are load-bearing)."""
-    from pyspark.sql import functions as F
-
-    from pyield_spark.functions.numbers import (
-        pround_expr, pround_sql_spark, round_pl_expr, round_pl_sql,
-        truncar_sql_spark,
-    )
-
-    vals = [0.141446, -0.141446, 808563725.6850001, 80856372568.49998,
-            2.5, -2.5, 0.105, -0.105, 1e-12, 0.0, -0.0,
-            float("nan"), float("inf"), 123.456789]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    out = df.select(
+    rows = df.select(
+        "i",
         round_pl_expr(F.col("x") / 100.0, 10).alias("pl_col"),
-        F.expr(round_pl_sql("x / 100.0D", 10)).alias("pl_sql"),
+        round_pl_expr("x / 100.0D", 10).alias("pl_sql"),
         pround_expr(F.col("x"), 6).alias("pa_col"),
-        F.expr(pround_sql_spark("x", 6)).alias("pa_sql"),
+        pround_expr("x", 6).alias("pa_sql"),
         truncar_expr(F.col("x"), 8).alias("tr_col"),
-        F.expr(truncar_sql_spark("x", 8)).alias("tr_sql"),
+        truncar_expr("x", 8).alias("tr_sql"),
         truncar_expr(truncar_expr(F.col("x"), 8), 8).alias("tr2_col"),
-        F.expr(truncar_sql_spark(truncar_sql_spark("x", 8), 8)).alias("tr2_sql"),
+        truncar_expr(truncar_expr("x", 8), 8).alias("tr2_sql"),
     ).collect()
-    for r in out:
-        for a, b in ((r["pl_col"], r["pl_sql"]), (r["pa_col"], r["pa_sql"]),
-                     (r["tr_col"], r["tr_sql"]), (r["tr2_col"], r["tr2_sql"])):
-            if a is None or (isinstance(a, float) and math.isnan(a)):
-                assert b is None or math.isnan(b)
-            else:
-                assert a == b, r
+
+    def same(a, b):
+        if a is None or b is None:
+            return a is b
+        if math.isnan(b):
+            return math.isnan(a)
+        return a == b and math.copysign(1.0, a) == math.copysign(1.0, b)
+
+    for r in rows:
+        x, pl, pa, tr, tr2 = want[r["i"]]
+        for name, w in (("pl", pl), ("pa", pa), ("tr", tr), ("tr2", tr2)):
+            for form in ("col", "sql"):
+                got = r[f"{name}_{form}"]
+                assert same(got, w), (x, name, form, got, w)

@@ -5,7 +5,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from pyield_spark.analytics.futuro import enrich, month_from_code_expr, with_vencimento
+from pyield_spark.analytics.futuro import enrich, with_vencimento
 from pyield_spark.analytics.selic import probabilities
 from pyield_spark.bonds.bootstrap import implied_rates
 from pyield_spark.bonds.pricing import price_coupon_bond
@@ -169,12 +169,6 @@ def test_normalizar_contratos(spark):
     ]
     assert normalizar_contratos("dol") == ["DOL"]
     assert normalizar_contratos(None) == []
-
-
-def test_month_code_roundtrip(spark):
-    df = spark.createDataFrame([("F",), ("G",), ("Z",), ("E",)], "c STRING")
-    got = [r.m for r in df.select(month_from_code_expr("c").alias("m")).collect()]
-    assert got == [1, 2, 12, None]
 
 
 def test_vencimento_roll(spark):

@@ -1556,8 +1556,8 @@ def test_ivf_candidate_pred_filters_exactly(spark):
     ).filter("qid <> nid").withColumn(
         "cosine",
         pround_expr(
-            dot_dec(F.col("qv"), F.col("nv"))
-            / (F.sqrt(norm_sq_dec(F.col("qv"))) * F.sqrt(norm_sq_dec(F.col("nv")))),
+            dot_dec("qv", "nv")
+            / (F.sqrt(norm_sq_dec("qv")) * F.sqrt(norm_sq_dec("nv"))),
             6,
         ),
     )
@@ -1598,3 +1598,42 @@ def test_ivf_sq8_exhaustive_matches_brute_sq8(spark):
                       n_centroids=6, n_probe=2).collect()
     assert pruned and all(1 <= r["rnk"] <= 3 for r in pruned)
     assert all(r["list_id"] is not None for r in pruned)
+
+
+def test_vector_column_named_with_backtick(spark):
+    """A user-supplied column name reaches SQL text only through
+    ``ident()``: cosine_topk, kmeans_assign and hybrid_rrf run on a
+    vector column named a`b and return exactly what they return on
+    the same vectors under a plain name."""
+    from pyield_spark.operators.semantic import kmeans_assign
+    from pyield_spark.operators.similarity import cosine_topk
+    from pyield_spark.operators.vocab import hybrid_rrf
+
+    docs = spark.createDataFrame(
+        [(i, "spark window merge vector" if i % 3 == 0
+          else "spark filler " + "pad " * (i % 7))
+         for i in range(40)],
+        "doc_id long, text string",
+    )
+    plain = spark.createDataFrame(
+        [(i, [float((i * 37 + d * 11) % 19) - 9.0 for d in range(64)])
+         for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    odd = plain.withColumnRenamed("embedding", "a`b")
+    pred = F.col("_vid") % 10 == 0
+
+    def runs(emb, vec_col):
+        return (
+            sorted(map(tuple, cosine_topk(
+                emb, vec_col=vec_col, query_pred=pred, k=3).collect())),
+            sorted(map(tuple, kmeans_assign(
+                emb, vec_col=vec_col, k=4, iters=2).collect())),
+            sorted(map(tuple, hybrid_rrf(
+                docs, emb, ["spark", "window", "merge", "vector"],
+                vec_col=vec_col, n_seed=2, k_each=6, k=8).collect())),
+        )
+
+    got = runs(odd, "a`b")
+    assert all(got)
+    assert got == runs(plain, "embedding")

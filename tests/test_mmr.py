@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -60,7 +62,7 @@ def test_greedy_step_invariant(spark, sf_dir):
 
     base = emb.select(
         F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
-    ).withColumn("_n2", norm_sq_dec(F.col("_v")))
+    ).withColumn("_n2", norm_sq_dec("_v"))
     a = base.select(
         F.col("_id").alias("a"), F.col("_v").alias("_av"), F.col("_n2").alias("_an")
     )
@@ -76,7 +78,7 @@ def test_greedy_step_invariant(spark, sf_dir):
             "a",
             "b",
             pround_expr(
-                dot_dec(F.col("_av"), F.col("_bv"))
+                dot_dec("_av", "_bv")
                 / (F.sqrt(F.col("_an")) * F.sqrt(F.col("_bn"))),
                 6,
             ).alias("s"),
@@ -118,6 +120,39 @@ def test_explicit_shortlist_matches_default(spark, sf_dir):
         .collect()
     )
     assert got == want
+
+
+def test_ragged_vector_maps_to_nan_not_crash(spark):
+    """One shortlist member whose vector is shorter than the group's
+    dimension maps to all-NaN (as a NULL vector does) instead of
+    failing the ragged array build. Its similarity to the rank-1 pick
+    is NaN, and NaN sorts above every score (Spark DESC order), so it
+    is the rank-2 pick with a NaN score — which the pandas → Arrow hop
+    delivers as NULL."""
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
+         for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    sl = sim.cosine_topk(emb, query_pred=F.col("_vid") == 0, k=6)
+    by_rank = {r["rnk"]: r["neighbor_id"] for r in sl.collect()}
+    short_id = by_rank[3]
+    ragged = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == short_id, F.slice("embedding", 1, 5))
+        .otherwise(F.col("embedding")),
+    )
+    out = (
+        sim.mmr_rerank(ragged, shortlist=sl, k=6, lam=0.5)
+        .orderBy("mmr_rank")
+        .collect()
+    )
+    assert [r["mmr_rank"] for r in out] == [1, 2, 3, 4, 5, 6]
+    assert sorted(r["neighbor_id"] for r in out) == sorted(by_rank.values())
+    assert out[0]["neighbor_id"] == by_rank[1]
+    assert not math.isnan(out[0]["mmr_score"])
+    assert out[1]["neighbor_id"] == short_id
+    assert out[1]["mmr_score"] is None
 
 
 def test_rp_exhaustive_refine_matches_brute(spark, sf_dir):

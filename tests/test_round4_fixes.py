@@ -42,6 +42,37 @@ def test_df_cache_is_per_session_not_per_context(spark):
     assert a2 is a
 
 
+def test_session_token_for_session_rejecting_attributes():
+    """Without a JVM session UUID, the token comes from a weak side
+    table of uuids: stable for a session object's lifetime, distinct
+    between live sessions, never ``id()``-derived (CPython reuses
+    addresses after GC), and it works on a session object that rejects
+    attribute assignment without keeping that object alive."""
+    import gc
+    import weakref
+
+    class _Ctx:
+        applicationId = "app-probe"
+        startTime = 1
+
+    class _ReadOnlySession:
+        sparkContext = _Ctx()
+        _jsparkSession = None  # no sessionUUID(): the fallback path
+
+        def __setattr__(self, name, value):
+            raise AttributeError("read-only session")
+
+    a, b = _ReadOnlySession(), _ReadOnlySession()
+    ta, tb = cal._session_token(a), cal._session_token(b)
+    assert ta == cal._session_token(a) == ("app-probe:1", ta[1])
+    assert ta[1] != tb[1]
+    assert str(id(a)) not in (ta[1], tb[1]) and str(id(b)) not in (ta[1], tb[1])
+    ref = weakref.ref(a)
+    del a
+    gc.collect()
+    assert ref() is None
+
+
 def test_lft_taxas_id_cols_out_of_dataframe_order(spark):
     """Passing ids in NON-DataFrame order must bind values to the right
     columns (the r3 verdict's latent-bug class for mapInPandas schemas)."""

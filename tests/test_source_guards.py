@@ -1,0 +1,66 @@
+"""Source-level guards over ``pyield_spark/``.
+
+No Spark session: these read the package's own files so a regression
+shows up as a named failure before any query runs.
+
+- every backtick-quoted identifier spliced into SQL text goes through
+  ``functions.sql.ident`` (which doubles inner backticks), never a raw
+  ``f"`{name}`"`` splice that breaks on a name holding a backtick;
+- each expression helper has one public entry point: the deleted
+  Column/SQL-string twins stay deleted.
+"""
+
+import re
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parent.parent / "pyield_spark"
+SOURCES = sorted(PKG.rglob("*.py"))
+
+# a single backtick opening a brace splice; ``{ (reST literal) is prose
+RAW_SPLICE = re.compile(r"(?<!`)`\{")
+
+DELETED_TWINS = (
+    "truncar_sql_spark",
+    "pround_sql_spark",
+    "round_pl_sql",
+    "sq8_quant_expr",
+    "sq8_dequant_expr",
+    "coupon_flow_expr",
+    "grid_pitch_expr",
+    "raw_maturity_expr",
+    "month_from_code_expr",
+    "norm_sq_sql",
+    "dot_sql",
+)
+DELETED_RE = re.compile(r"\b(" + "|".join(DELETED_TWINS) + r")\b")
+
+
+def _hits(pattern: re.Pattern) -> list[str]:
+    return [
+        f"{path.relative_to(PKG.parent)}:{i}: {line.strip()}"
+        for path in SOURCES
+        for i, line in enumerate(path.read_text().splitlines(), start=1)
+        if pattern.search(line)
+    ]
+
+
+def test_sources_found():
+    assert len(SOURCES) > 50
+
+
+def test_no_raw_identifier_splice():
+    bad = _hits(RAW_SPLICE)
+    assert not bad, "quote spliced names with ident():\n" + "\n".join(bad)
+
+
+def test_no_deleted_twin_names():
+    bad = _hits(DELETED_RE)
+    assert not bad, "deleted twin helper referenced:\n" + "\n".join(bad)
+
+
+def test_guards_catch_what_they_target():
+    assert RAW_SPLICE.search('f"CAST(`{c}` AS DOUBLE)"')
+    assert not RAW_SPLICE.search('``{"registros": [...]}``')
+    assert not RAW_SPLICE.search('f"CAST({ident(c)} AS DOUBLE)"')
+    assert DELETED_RE.search("F.expr(round_pl_sql(c, 10))")
+    assert not DELETED_RE.search("sq8_quant_sql(vec, mn, mx)")

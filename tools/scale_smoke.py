@@ -1015,9 +1015,9 @@ def main():
                 rp_emb.select(
                     F.col("vec_id").alias("_vid"),
                     F.col("embedding").alias("_vec"),
-                    rp_project_expr(F.col("embedding")).alias("_rvec"),
+                    rp_project_expr("embedding").alias("_rvec"),
                 )
-                .withColumn("_rnorm2", norm_sq_dec(F.col("_rvec")))
+                .withColumn("_rnorm2", norm_sq_dec("_rvec"))
                 .localCheckpoint()
             )
             return rp_holder["idx"].count()
