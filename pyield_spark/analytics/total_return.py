@@ -63,6 +63,7 @@ from pyield_spark import du as du_mod
 from pyield_spark.bonds.cashflows import explode_payment_dates
 from pyield_spark.bonds.pricing import NTNB_CUPOM, ntnb_cotacao
 from pyield_spark.operators.asof import asof_join
+from pyield_spark.operators.pinning import pin
 
 #: semiannual reinvestment rate for received coupons: (1.06)^(1/2) − 1
 #: (utils.py:9 TAXA_REINVESTIMENTO_CUPOM — the raw float, NOT the
@@ -208,7 +209,7 @@ def decompor_retorno_ntnb(
     # is one row per (position, period), so materializing it is cheap
     # at any scale (same pattern as q_vna_prorata's pubs and
     # interpolar's ungrouped route).
-    periods = periods.localCheckpoint(eager=False)
+    periods = pin(periods, eager=False)
 
     # 4. three quotes per period in ONE ntnb_cotacao pass over a
     # role-tagged explode: i = (inicio, taxa_ini), f = (fim, taxa_fim),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyield_spark import du as du_mod
 from pyield_spark.bonds.cashflows import coupon_flow_sql, explode_payment_dates
 from pyield_spark.functions.sql import ident
+from pyield_spark.operators.pinning import pin
 
 TOL = 1e-12
 MAX_ITER = 200
@@ -381,7 +382,7 @@ def ntnb_taxas_zero(
     # clean (the deduped vertex panel) feeds three consumers — the grid
     # span, the TIR interpolation vertices, and the final maturity
     # semi-join. It is curve-sized (vertices, not facts), but its
-    # lineage aggregates the INPUT panel — localCheckpoint materializes
+    # lineage aggregates the INPUT panel — pin materializes
     # it once instead of re-running that aggregation per consumer
     # (same pattern as semantic_dedup's assignment reuse).
     # NaN rates drop BEFORE the keep-max dedupe (interpolate.py's own
@@ -390,12 +391,12 @@ def ntnb_taxas_zero(
     # the TIR curve (review fix). Nulls need no filter — max ignores
     # them.
     _tir_d = F.col(tir).cast("double")
-    clean = (
+    clean = pin(
         bonds.filter(F.to_date(maturity) > liq)
         .filter(_tir_d.isNull() | ~F.isnan(_tir_d))
         .groupBy(*by_cols, F.to_date(maturity).alias("_ven"))
-        .agg(F.max(_tir_d).alias("_tir"), F.min(liq).alias("_liq"))
-        .localCheckpoint(eager=False)
+        .agg(F.max(_tir_d).alias("_tir"), F.min(liq).alias("_liq")),
+        eager=False,
     )
     grp = clean.groupBy(*by_cols).agg(
         F.min("_liq").alias("_liq"),

@@ -28,6 +28,8 @@ import uuid
 import weakref
 from functools import lru_cache
 
+from pyield_spark.operators.pinning import pin
+
 # Regime transition: start dates before this use the "antigo" list
 # (reference: pyield/du/core.py:20-25, feriados_br.py:18).
 TRANSITION_DATE = dt.date(2023, 12, 26)
@@ -217,7 +219,7 @@ def df_cache_get(spark, subkey: tuple, builder):
 def calendar_df(spark, start: dt.date = CAL_START, end: dt.date = CAL_END):
     """The business-day dimension as a (broadcastable) Spark DataFrame.
 
-    Materialized via ``localCheckpoint`` rather than ``cache``: a
+    Materialized via ``pin`` rather than ``cache``: a
     cached ``createDataFrame`` still embeds the ~40k-row LocalRelation
     in the LOGICAL plan of every consumer, so each analysis /
     checkpoint / plan-stringification in a calendar-joining query walks
@@ -229,9 +231,9 @@ def calendar_df(spark, start: dt.date = CAL_START, end: dt.date = CAL_END):
     return df_cache_get(
         spark,
         ("cal", start, end),
-        lambda: spark.createDataFrame(
-            calendar_rows(start, end), _CAL_SCHEMA
-        ).localCheckpoint(),
+        lambda: pin(
+            spark.createDataFrame(calendar_rows(start, end), _CAL_SCHEMA)
+        ),
     )
 
 
@@ -246,10 +248,9 @@ def business_dates_df(spark, start: dt.date = CAL_START, end: dt.date = CAL_END)
                 rows.append(("antigo", c_a, d))
             if bd_n:
                 rows.append(("novo", c_n, d))
-        # localCheckpoint, not cache — same plan-size rationale as
-        # calendar_df above
-        return spark.createDataFrame(
-            rows, "regime STRING, ordinal BIGINT, data DATE"
-        ).localCheckpoint()
+        # pin, not cache — same plan-size rationale as calendar_df above
+        return pin(
+            spark.createDataFrame(rows, "regime STRING, ordinal BIGINT, data DATE")
+        )
 
     return df_cache_get(spark, ("bdinv", start, end), build)

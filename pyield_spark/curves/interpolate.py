@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pyield_spark.functions.sql import ident
+from pyield_spark.operators.pinning import pin
 
 DAYS_PER_YEAR = 252.0
 
@@ -154,7 +155,7 @@ def interpolar(
         # 7 scans of a fact-derived curve lineage per action (review
         # fix). One lazy checkpoint materializes it once; the
         # broadcast route already does this.
-        cur = cur.localCheckpoint(eager=False)
+        cur = pin(cur, eager=False)
 
     if distribution == "broadcast":
         joined = _broadcast_brackets(targets, cur, by_cols, du_col)
@@ -423,7 +424,7 @@ def _broadcast_brackets(
     # agg, target-side stats join); when the curve is derived from a
     # fact table, an unmaterialized lineage would re-execute per
     # consumer — checkpoint once (lazy: materializes on first use)
-    cur = cur.localCheckpoint(eager=False)
+    cur = pin(cur, eager=False)
     _part = (
         "PARTITION BY " + ", ".join(ident(c) for c in by_cols)
         if by_cols

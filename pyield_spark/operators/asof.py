@@ -45,6 +45,8 @@ import warnings
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pyield_spark.operators.pinning import pin
+
 try:  # the JVM bridge's error family (absent under Spark Connect)
     from py4j.protocol import Py4JError as _Py4JError
 
@@ -190,7 +192,7 @@ def auto_distribution_exact(
     with no job.
 
     Opt-in by contract (``auto`` never launches a job): callers should
-    ``localCheckpoint(eager=False)`` the right side FIRST so the pass
+    ``pin(right, eager=False)`` the right side FIRST so the pass
     the probe spends materializes the frame the join then reuses —
     ``asof_join``/``interpolar`` do exactly that, making the probe's
     marginal cost ≈ 0 on the plans where it matters (PLANS.md r9 skew
@@ -230,14 +232,14 @@ def auto_distribution_exact(
 def resolve_auto_exact(right: DataFrame) -> tuple[DataFrame, str]:
     """The shared ``distribution="auto-exact"`` resolution for
     ``asof_join``/``interpolar``: free Catalyst probe on the
-    UN-checkpointed frame first (a lazy localCheckpoint becomes a
+    UN-checkpointed frame first (a lazy pin becomes a
     LogicalRDD whose stats hide a bounded estimate); only the
     unbounded case checkpoints and spends the bounded count, so the
     probe's pass materializes the exact frame the join consumes.
     Returns the (possibly checkpointed) frame and the route."""
     if auto_distribution(right) == "broadcast":
         return right, "broadcast"
-    right = right.localCheckpoint(eager=False)
+    right = pin(right, eager=False)
     # stats_probe=False: the checkpointed LogicalRDD has no usable
     # estimate, so re-probing would only burn py4j round trips
     return right, auto_distribution_exact(right, stats_probe=False)
@@ -592,18 +594,18 @@ def _asof_broadcast(
             f" {on} is {key_t.simpleString()} — use distribution='shuffle'"
         )
 
-    rs = (
+    # the series lineage feeds the interval window AND the stats agg —
+    # checkpoint once so a fact-derived series isn't re-executed per
+    # consumer (lazy: materializes on first use)
+    rs = pin(
         right.select(
             *[F.col(c) for c in by_cols],
             _numeric_key(F.col(right_on).cast(key_t), key_t).alias("_kn"),
             F.struct(*[F.col(v) for v in values]).alias("_v"),
         )
         .filter(F.col("_kn").isNotNull())
-        .dropDuplicates(by_cols + ["_kn"])
-        # the series lineage feeds the interval window AND the stats
-        # agg — checkpoint once so a fact-derived series isn't
-        # re-executed per consumer (lazy: materializes on first use)
-        .localCheckpoint(eager=False)
+        .dropDuplicates(by_cols + ["_kn"]),
+        eager=False,
     )
     # interval bounds: one window over the dimension-sized series
     w = (

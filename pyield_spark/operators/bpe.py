@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pyield_spark.operators.pinning import pin
 from pyield_spark.operators.text import tokens_expr
 
 
@@ -139,11 +140,11 @@ def bpe_train(
     words = docs.select(F.explode(tokens_expr(text)).alias("w")).filter(
         F.length("w") > 0
     )
-    cur = (
+    # eager: the corpus pass runs once, here
+    cur = pin(
         words.groupBy("w")
         .agg(F.count("*").cast("long").alias("f"))
         .select("f", F.split("w", "").alias("toks"))
-        .localCheckpoint()  # eager: the corpus pass runs once, here
     )
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
@@ -161,9 +162,9 @@ def bpe_train(
         # apply the new merge to the word table; checkpoint per round
         # keeps the fold chain out of the NEXT round's plan (the
         # label-propagation lineage discipline)
-        cur = cur.select(
-            "f", F.expr(merge_step_sql("toks", a, b)).alias("toks")
-        ).localCheckpoint()
+        cur = pin(
+            cur.select("f", F.expr(merge_step_sql("toks", a, b)).alias("toks"))
+        )
     return merges
 
 
@@ -181,7 +182,9 @@ def bpe_token_count(
     if merges is None:
         merges = []
     wdoc = docs.select(F.col(id_col), F.explode(tokens_expr(text)).alias("w"))
-    vocab = (
+    # vocab is consumed once by the join but its lineage contains the
+    # corpus explode — don't re-plan that scan under the join
+    vocab = pin(
         wdoc.select("w")
         .distinct()
         .select(
@@ -189,10 +192,8 @@ def bpe_token_count(
             F.size(F.expr(bpe_apply_sql(merges, "w"))).cast("long").alias(
                 "_n_bpe"
             ),
-        )
-        .localCheckpoint(eager=False)  # vocab is consumed once by the
-        # join but its lineage contains the corpus explode — don't
-        # re-plan that scan under the join
+        ),
+        eager=False,
     )
     return (
         wdoc.join(vocab, "w")

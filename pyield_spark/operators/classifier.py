@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from pyield_spark.functions.numbers import pround_expr
 from pyield_spark.operators import text as tx
+from pyield_spark.operators.pinning import pin
 
 #: feature names, index-aligned with the weight vector (0 = bias)
 CLF_FEATURES = ("bias", "tokens_128", "stopwords_4", "word_len_8", "distinct_ratio")
@@ -163,9 +164,11 @@ def logreg_train(
     rerunning the trainer reproduces the artifact byte-for-byte."""
     feats = clf_features(text)
     y = clf_label(text).cast("double")
-    base = df.select(
-        y.alias("_y"), *[fc.alias(f"_f{j}") for j, fc in enumerate(feats)]
-    ).localCheckpoint()
+    base = pin(
+        df.select(
+            y.alias("_y"), *[fc.alias(f"_f{j}") for j, fc in enumerate(feats)]
+        )
+    )
     n = base.count()
     if n == 0:
         raise ValueError("empty training frame")

@@ -335,7 +335,7 @@ def lsh_candidate_pairs(
     # the full text scan + shingle explode + min-hash aggregation runs
     # twice per query (plan-verified: 4 parquet scans in the r10
     # baseline plan). The signature frame is (id, k mh columns) —
-    # linear and narrow, never the text — so a lazy localCheckpoint
+    # linear and narrow, never the text — so a lazy pin
     # pays one tiny persist for half the heavy map work (guide §8:
     # decide on fingerprints, scan the payload once).
     sig = pin(minhash_signatures(df, text, id_col, n, num_perm), eager=False)

@@ -20,7 +20,7 @@ Algorithm: iterative min-label propagation.
   riding the checkpoint, no join against the previous state needed).
 - Each step is ONE shuffle join (edges x labels) plus ONE groupBy —
   both on the node key, so AQE coalesces them back-to-back.
-- ``localCheckpoint`` after every round cuts the lineage: without it
+- ``pin`` after every round cuts the lineage: without it
   round k re-executes rounds 1..k-1 (the classic iterative-plan
   recompute trap) and the driver's plan grows unboundedly.
 
@@ -49,6 +49,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from pyield_spark.operators.pinning import pin
 
+# Longest one connected_components call waits on an Observation: after
+# the first timeout its remaining rounds read the checksum with an
+# explicit agg, so the worst case is one wait per call, not per round.
+OBS_WAIT_S = 60.0
+
+
 def _chk_col():
     """The per-round convergence checksum, shared by the observe() fast
     path and the bounded-wait fallback below (a function, not a module
@@ -56,7 +62,12 @@ def _chk_col():
     return F.sum(F.xxhash64("label").cast("decimal(38,0)")).alias("chk")
 
 
-def _observed_chk(obs, labels: DataFrame, timeout: float = 60.0):
+def _agg_chk(labels: DataFrame):
+    """The checksum as an explicit ``agg().collect()`` over ``labels``."""
+    return labels.agg(_chk_col()).collect()[0]["chk"]
+
+
+def _observed_chk(obs, labels: DataFrame, timeout: float):
     """Read the round checksum from the Observation with a BOUNDED wait.
 
     ``Observation.get`` blocks indefinitely and relies on the eager
@@ -67,6 +78,10 @@ def _observed_chk(obs, labels: DataFrame, timeout: float = 60.0):
     the listener normally posts within milliseconds — so on timeout we
     fall back to the pre-r10 explicit ``agg().collect()`` checksum over
     the already-checkpointed labels: one extra bounded pass, same value.
+
+    Returns ``(checksum, observed)``; ``observed`` is False when the
+    fallback ran, so the caller stops observing for the rest of its
+    rounds.
     """
     import threading
 
@@ -82,9 +97,8 @@ def _observed_chk(obs, labels: DataFrame, timeout: float = 60.0):
     t.start()
     t.join(timeout)
     if t.is_alive() or "e" in box:  # metrics never arrived
-        row = labels.agg(_chk_col()).collect()[0]
-        return row["chk"]
-    return box["v"]
+        return _agg_chk(labels), False
+    return box["v"], True
 
 
 def connected_components(
@@ -140,6 +154,7 @@ def connected_components(
     prev_sum = None
     rounds = 1
     converged = False
+    observing = True
     from pyspark.sql import Observation
 
     for it in range(max_iter):
@@ -166,9 +181,13 @@ def connected_components(
         # agg().collect() — one action per round instead of two, and at
         # scale one less full pass over the labels (guide §1.2/§2.4;
         # probe-verified identical value, 0 extra jobs).
-        obs = Observation(f"cc_chk_{it}")
-        labels = pin(labels.observe(obs, _chk_col()))
-        cur = _observed_chk(obs, labels)
+        if observing:
+            obs = Observation(f"cc_chk_{it}")
+            labels = pin(labels.observe(obs, _chk_col()))
+            cur, observing = _observed_chk(obs, labels, OBS_WAIT_S)
+        else:  # an earlier round's Observation timed out
+            labels = pin(labels)
+            cur = _agg_chk(labels)
         if cur is None:
             # empty label set (no edges): the fixpoint is trivially the
             # empty frame. Without this branch the None checksum never

@@ -28,7 +28,7 @@ def with_row_index(df: DataFrame, sequential: bool = False, col: str = IDX) -> D
     frame forks into branches that are joined back on the index, or a
     task retry / AQE re-plan re-executes the assignment, the same row
     can receive a different id. For fork-and-rejoin alignment, pin the
-    assignment first: ``with_row_index(df).localCheckpoint()`` (or
+    assignment first: ``pinning.pin(with_row_index(df))`` (or
     derive the index from data via a row_number over a deterministic
     key ordering)."""
     out = df.withColumn(col, F.monotonically_increasing_id())

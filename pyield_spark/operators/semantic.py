@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from pyield_spark.functions.sql import ident
+from pyield_spark.operators.pinning import pin
 from pyield_spark.operators.similarity import _as_double, dot_dec, norm_sq_dec
 
 
@@ -335,18 +336,17 @@ def semantic_dedup(
     # final keep-join). Without a checkpoint Spark does NOT reuse the
     # subplan (measured: 9 parquet scans, 15 exchanges, 0 ReusedExchange
     # — the full Lloyd lineage recomputes per consumer, a 3× recompute
-    # of the clustering at 100 TB); localCheckpoint materializes it
+    # of the clustering at 100 TB); pin materializes it
     # once. r4 measurement at sf0.1 (warm): eager=True 1.50s,
     # eager=False 1.60s, none 1.21s — the no-checkpoint local win is
     # small-data noise, the recompute is what hurts at scale. Same
     # pattern as graph.connected_components.
-    assigned = (
+    assigned = pin(
         kmeans_assign(
             emb, id_col, vec_col, k=k, iters=iters,
             route=route, n_probe=n_probe,
-        )
-        .withColumn("_n2", norm_sq_dec("_v"))
-        .localCheckpoint(eager=True)
+        ).withColumn("_n2", norm_sq_dec("_v")),
+        eager=True,
     )
     a = assigned.select(
         F.col("_vid").alias("_ida"), F.col("_v").alias("_va"),

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pyield_spark.functions.sql import ident
+from pyield_spark.operators.pinning import pin
 
 
 # The fold helpers below take SQL fragments (usually an internal column
@@ -489,9 +490,10 @@ def ivf_topk(
     # exactly-sized tiny build side (AQE broadcast; the corpus side
     # never shuffles) instead of planning against an unmaterialized
     # window subtree (same fix as ivfpq_topk, measured there)
-    probes = _ivf_nearest_lists(
-        queries, cents, "query_id", "_qvec", "_qnorm2", n_probe
-    ).localCheckpoint(eager=False)
+    probes = pin(
+        _ivf_nearest_lists(queries, cents, "query_id", "_qvec", "_qnorm2", n_probe),
+        eager=False,
+    )
 
     cand = probes.join(assigned, "_cid").filter(F.col("_vid") != F.col("query_id"))
     scored = cand.withColumn(
@@ -1079,13 +1081,16 @@ def ivfpq_topk(
     # (b) the per-query LUT folds compute once, not once per consumer.
     # Measured at the 100× lap: the serve wall drops ~4× (the
     # unmaterialized window subtree was dominating the whole path).
-    probes = _ivf_nearest_lists(
-        queries.withColumn("_lut", lut), cents, "query_id", "_qvec",
-        "_qnorm2", n_probe,
-        # residual ADC needs the raw ⟨q, c⟩ of each probed list:
-        # dot(q, c + r̂) = ⟨q, c⟩ + Σ_s LUT[s][code_s]
-        keep_dot="_qcdot" if by_residual else None,
-    ).localCheckpoint(eager=False)
+    probes = pin(
+        _ivf_nearest_lists(
+            queries.withColumn("_lut", lut), cents, "query_id", "_qvec",
+            "_qnorm2", n_probe,
+            # residual ADC needs the raw ⟨q, c⟩ of each probed list:
+            # dot(q, c + r̂) = ⟨q, c⟩ + Σ_s LUT[s][code_s]
+            keep_dot="_qcdot" if by_residual else None,
+        ),
+        eager=False,
+    )
 
     # --- ADC scoring: m table lookups per candidate, no dim-sized work.
     # The candidate stream is CODES-ONLY: neither side's full vector
@@ -1508,9 +1513,7 @@ def sq8_topk(
     assigned = (
         index
         if index is not None
-        else sq8_encode(emb, id_col, vec_col, dim, bits).localCheckpoint(
-            eager=False
-        )
+        else pin(sq8_encode(emb, id_col, vec_col, dim, bits), eager=False)
     )
     deq = F.expr(
         sq8_dequant_sql("_codes", "_mn", "_mx", levels=(1 << bits) - 1)
@@ -1522,17 +1525,17 @@ def sq8_topk(
         "_vid", "_vec", "_norm2", *pre_cid, deq.alias("_dq")
     ).withColumn("_dqn2", norm_sq_dec("_dq"))
 
-    queries = (
+    # tiny side: AQE broadcasts it, the corpus never shuffles (same
+    # shape as ivf/ivfpq probes)
+    queries = pin(
         assigned.filter(
             query_pred if query_pred is not None else (F.col("_vid") % 100 == 0)
-        )
-        .select(
+        ).select(
             F.col("_vid").alias("query_id"),
             F.col("_vec").alias("_qvec"),
             F.col("_norm2").alias("_qnorm2"),
-        )
-        .localCheckpoint(eager=False)  # tiny side: AQE broadcasts it,
-        # the corpus never shuffles (same shape as ivf/ivfpq probes)
+        ),
+        eager=False,
     )
     if n_centroids:
         # IVF-SQ8: coarse lists over the index frame, probed-list
@@ -1544,9 +1547,12 @@ def sq8_topk(
         corpus_l = corpus if pre_cid else _ivf_nearest_lists(
             corpus, cents, "_vid", "_vec", "_norm2", 1
         )
-        probes = _ivf_nearest_lists(
-            queries, cents, "query_id", "_qvec", "_qnorm2", n_probe
-        ).localCheckpoint(eager=False)
+        probes = pin(
+            _ivf_nearest_lists(
+                queries, cents, "query_id", "_qvec", "_qnorm2", n_probe
+            ),
+            eager=False,
+        )
         cand = probes.join(corpus_l, "_cid").filter(
             F.col("_vid") != F.col("query_id")
         )
@@ -1688,7 +1694,7 @@ def hard_negatives(
             # probe set is bounded: with query_pred=None probes are
             # CORPUS-sized and materializing n_probe copies of every
             # vector would trade a shuffle for an O(N·n_probe) pin.
-            probed = probed.localCheckpoint(eager=False)
+            probed = pin(probed, eager=False)
         # equi-join on the list id — the pruning step; the self pair is
         # removed by the label filter (a vector shares its own label)
         pairs = probed.join(assigned, "_cid").filter(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from pyield_spark.functions.sql import ident
 from pyield_spark.operators import text as tx
+from pyield_spark.operators.pinning import pin
 
 
 def bigrams_expr(tokens: Column) -> Column:
@@ -428,9 +429,12 @@ def hybrid_rrf(
 
     bm = bm25_topk(docs, text, id_col, terms, k=k_each)
     w_bm = Window.orderBy(F.col("bm25").desc(), F.col(id_col).asc())
-    bmrank = bm.select(
-        F.col(id_col).alias("_id"), F.row_number().over(w_bm).alias("r_bm25")
-    ).localCheckpoint(eager=False)  # ≤ k_each rows; reused by seed + fusion
+    bmrank = pin(  # ≤ k_each rows; reused by seed + fusion
+        bm.select(
+            F.col(id_col).alias("_id"), F.row_number().over(w_bm).alias("r_bm25")
+        ),
+        eager=False,
+    )
 
     base = emb.select(
         F.col(vec_id).alias("_vid"), _as_double(ident(vec_col)).alias("_v")
@@ -494,9 +498,7 @@ def hybrid_rrf(
             # SQ8-encoded index: codes/mn/mx ride the frame; the NaN /
             # length filters match sq8_encode's index contract (exact
             # route drops the same vectors later at isnan(_cos))
-            enc = sq8_encode(emb, vec_id, vec_col, dim).localCheckpoint(
-                eager=False
-            )
+            enc = pin(sq8_encode(emb, vec_id, vec_col, dim), eager=False)
         else:
             enc = (
                 base.select(F.col("_vid"), F.col("_v").alias("_vec"))
@@ -506,10 +508,13 @@ def hybrid_rrf(
         cents = _ivf_codebook(enc, n_centroids)
         # the single PRF centroid probes its n_probe nearest lists —
         # a C-row broadcast pass over ONE row
-        probes = _ivf_nearest_lists(
-            cent.withColumn("_qid", F.lit(0)), cents, "_qid", "_c", "_cn2",
-            n_probe,
-        ).localCheckpoint(eager=False)
+        probes = pin(
+            _ivf_nearest_lists(
+                cent.withColumn("_qid", F.lit(0)), cents, "_qid", "_c", "_cn2",
+                n_probe,
+            ),
+            eager=False,
+        )
         # a pre-assigned index (ivf_assign, same n_centroids) already
         # carries _cid — the N·C assignment pass is ingest-side then
         corpus_l = enc if "_cid" in enc.columns else _ivf_nearest_lists(

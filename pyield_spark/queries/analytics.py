@@ -13,6 +13,7 @@ from pyield_spark.bonds.bootstrap import implied_rates, ntnb_taxas_zero
 from pyield_spark.bonds.pricing import price_coupon_bond
 from pyield_spark.functions.numbers import pround_expr, truncar_expr
 from pyield_spark.operators.asof import asof_join
+from pyield_spark.operators.pinning import pin
 from pyield_spark.queries import query, tables
 from pyield_spark.queries.fixed_income import _CAL, _curve_df
 from pyield_spark.queries.oracle_helpers import (
@@ -255,9 +256,9 @@ def q_vna_prorata(spark, sf_dir):
     # the two as-ofs reference pubs ~3x each; without materialization the
     # lineitem aggregation re-scans + re-shuffles the fact table on every
     # reference (measured: 4 lineitem scans in the plan). pubs is a tiny
-    # monthly series — localCheckpoint truncates the lineage so the
+    # monthly series — pin truncates the lineage so the
     # aggregation runs exactly once at any scale.
-    pubs = pubs.localCheckpoint(eager=False)
+    pubs = pin(pubs, eager=False)
     alvo = od.select("o_orderkey", F.to_date("o_orderdate").alias("data"))
     # the publication series is dimension-sized (one row per month) →
     # the broadcast as-of route: zero fact-side shuffles for BOTH
@@ -702,7 +703,7 @@ def q_premio_limpo(spark, sf_dir):
     # arm, the meta join) — materialize once instead of re-scanning
     # lineitem/orders per reference (measured: 5 lineitem + 4 orders
     # scans in the plan before checkpointing)
-    di_curve = _di_curve_df(spark, sf_dir).localCheckpoint(eager=False)
+    di_curve = pin(_di_curve_df(spark, sf_dir), eager=False)
     bonds = (
         od.filter(F.col("o_orderkey") % 37 == 0)
         .select(
@@ -719,7 +720,7 @@ def q_premio_limpo(spark, sf_dir):
         )
         .join(di_curve.select("grupo").distinct(), "grupo", "left_semi")
     )
-    bonds = bonds.localCheckpoint(eager=False)
+    bonds = pin(bonds, eager=False)
     # price_alias: the solver's target IS the STN price at the TIR —
     # no second pricing lineage + join just to surface pu
     prem = premio_limpo(

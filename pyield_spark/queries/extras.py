@@ -611,6 +611,7 @@ def q_heavy_hitters(spark, sf_dir):
     total order (grams unique after the groupBy)."""
     from pyield_spark.operators import sketch as sk
     from pyield_spark.operators.dedup import ngrams_expr
+    from pyield_spark.operators.pinning import pin
     from pyield_spark.operators.text import tokens_expr
 
     docs = tables(spark, sf_dir, "documents")
@@ -623,10 +624,8 @@ def q_heavy_hitters(spark, sf_dir):
     # verification twin) doubles as the build input via count_col — the
     # tokenize+explode subtree is never re-executed (review finding);
     # the lazy checkpoint cuts the shared subtree for the two consumers
-    cand = (
-        occ.groupBy("gram")
-        .agg(F.count("*").alias("exact_count"))
-        .localCheckpoint(eager=False)
+    cand = pin(
+        occ.groupBy("gram").agg(F.count("*").alias("exact_count")), eager=False
     )
     grid = sk.countmin_build(cand, "gram", _CM_W, _CM_D, count_col="exact_count")
     est = sk.countmin_estimate(cand, "gram", grid, _CM_W, _CM_D)

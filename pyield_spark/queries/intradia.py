@@ -21,6 +21,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from pyield_spark.operators.pinning import pin
 from pyield_spark.queries import query, tables
 from pyield_spark.queries.fixed_income import _CAL
 from pyield_spark.queries.oracle_helpers import bd_count_sql, pround_sql
@@ -370,7 +371,7 @@ def q_mensal_gold(spark, sf_dir):
     # (+2 round-robin exchanges). The connector contract says `lines`
     # is an already-read frame (real zips arrive materialized), so the
     # twin mirrors that: one synthesis pass, one scan, narrow pin.
-    lines = hdr.unionByName(data).localCheckpoint(eager=False)
+    lines = pin(hdr.unionByName(data), eager=False)
     return mensal_gold(mensal_silver_from_lines(lines))
 
 

@@ -15,6 +15,7 @@ from pyield_spark.operators import graph as gr
 from pyield_spark.operators import multimodal as mm
 from pyield_spark.operators import similarity as sim
 from pyield_spark.operators import text as tx
+from pyield_spark.operators.pinning import pin
 from pyield_spark.queries import query, tables
 from pyield_spark.queries.oracle_helpers import pround_sql
 
@@ -1364,12 +1365,13 @@ def q_sq8_index_add(spark, sf_dir):
     # three consumers — corpus scan, queries scan, refine fetch — get
     # one materialization, the same reason sq8_topk checkpoints its
     # own inline encode; review fix)
-    idx = sim.sq8_index_add(
-        sim.sq8_encode(prefix, "vec_id", "embedding").localCheckpoint(
-            eager=False
+    idx = pin(
+        sim.sq8_index_add(
+            pin(sim.sq8_encode(prefix, "vec_id", "embedding"), eager=False),
+            batch, "vec_id", "embedding", drift="ignore",
         ),
-        batch, "vec_id", "embedding", drift="ignore",
-    ).localCheckpoint(eager=False)
+        eager=False,
+    )
     return sim.sq8_topk(emb, "vec_id", "embedding", k=5, refine=20, index=idx)
 
 

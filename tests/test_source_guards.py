@@ -7,7 +7,9 @@ shows up as a named failure before any query runs.
   ``functions.sql.ident`` (which doubles inner backticks), never a raw
   ``f"`{name}`"`` splice that breaks on a name holding a backtick;
 - each expression helper has one public entry point: the deleted
-  Column/SQL-string twins stay deleted.
+  Column/SQL-string twins stay deleted;
+- every lineage cut goes through ``operators.pinning.pin``, the one
+  place that picks ``localCheckpoint`` or reliable ``checkpoint``.
 """
 
 import re
@@ -34,11 +36,14 @@ DELETED_TWINS = (
 )
 DELETED_RE = re.compile(r"\b(" + "|".join(DELETED_TWINS) + r")\b")
 
+LINEAGE_CUT = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+PIN_MODULE = PKG / "operators" / "pinning.py"
 
-def _hits(pattern: re.Pattern) -> list[str]:
+
+def _hits(pattern: re.Pattern, sources=SOURCES) -> list[str]:
     return [
         f"{path.relative_to(PKG.parent)}:{i}: {line.strip()}"
-        for path in SOURCES
+        for path in sources
         for i, line in enumerate(path.read_text().splitlines(), start=1)
         if pattern.search(line)
     ]
@@ -58,9 +63,19 @@ def test_no_deleted_twin_names():
     assert not bad, "deleted twin helper referenced:\n" + "\n".join(bad)
 
 
+def test_lineage_cuts_go_through_pin():
+    assert PIN_MODULE in SOURCES
+    bad = _hits(LINEAGE_CUT, [p for p in SOURCES if p != PIN_MODULE])
+    assert not bad, "cut lineage with pinning.pin():\n" + "\n".join(bad)
+
+
 def test_guards_catch_what_they_target():
     assert RAW_SPLICE.search('f"CAST(`{c}` AS DOUBLE)"')
     assert not RAW_SPLICE.search('``{"registros": [...]}``')
     assert not RAW_SPLICE.search('f"CAST({ident(c)} AS DOUBLE)"')
     assert DELETED_RE.search("F.expr(round_pl_sql(c, 10))")
     assert not DELETED_RE.search("sq8_quant_sql(vec, mn, mx)")
+    assert LINEAGE_CUT.search("cur = cur.localCheckpoint(eager=False)")
+    assert LINEAGE_CUT.search(").checkpoint()")
+    assert not LINEAGE_CUT.search("cur = pin(cur, eager=False)")
+    assert not LINEAGE_CUT.search("sc.setCheckpointDir(ckdir)")

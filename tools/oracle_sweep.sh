@@ -68,5 +68,28 @@ for ansi_sf in sf0.01 sf0.1; do
     echo
   } >> "$OUT"
 done
+# Reliable-pin lap: the full registry once more at check_oracle.py's
+# default scale factor (sf0.01) with every lineage cut checkpointed into
+# a fresh directory instead of executor local storage, so
+# SPARK_GRAFT_PIN_MODE=reliable stays verified.
+ckdir=$(mktemp -d)
+{
+  echo "## SPARK_GRAFT_PIN_MODE=reliable lap (full registry, sf0.01)"
+  echo
+  echo '```'
+} >> "$OUT"
+env -u CHECK_SF_DIR SPARK_GRAFT_PIN_MODE=reliable SPARK_GRAFT_CHECKPOINT_DIR="$ckdir" \
+  PYTHONPATH="$PWD" python tools/check_oracle.py >> "$OUT" 2>> "$ERRLOG"
+rc=$?
+rm -rf "$ckdir"
+if [ "$rc" -ne 0 ]; then
+  overall=$rc
+  echo "SWEEP-ERROR: reliable-pin lap (sf0.01) exited rc=$rc (stderr tail below)" >> "$OUT"
+  tail -5 "$ERRLOG" >> "$OUT"
+fi
+{
+  echo '```'
+  echo
+} >> "$OUT"
 tail -6 "$OUT"
 exit "$overall"
