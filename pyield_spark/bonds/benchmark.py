@@ -26,6 +26,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyield_spark.functions.frames import local_frame
 from pyield_spark.functions.sql import ident
 
 # API field → canonical column (pyield/tpf/benchmark.py:57-63)
@@ -43,8 +44,8 @@ def read_benchmarks_json(spark: SparkSession, path: str) -> DataFrame:
     ``registros`` element, original field names)."""
     raw = spark.read.option("multiLine", "true").json(path)
     if "registros" not in raw.columns:
-        return spark.createDataFrame(
-            [], ", ".join(f"{ident(orig)} string" for orig, _ in _FIELD_MAP)
+        return local_frame(
+            spark, [], ", ".join(f"{ident(orig)} string" for orig, _ in _FIELD_MAP)
         )
     return raw.select(F.explode("registros").alias("r")).select("r.*")
 

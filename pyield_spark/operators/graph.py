@@ -41,18 +41,56 @@ and pay nothing. The fixpoint is unchanged (labels are still
 component-min ids), so results are bit-identical to plain propagation
 — the measured lap is in PLANS.md (chain diameter 100k: ~20 rounds
 accelerated vs >max_iter plain).
+
+Route: a graph small enough for the driver never enters the loop. One
+bounded read, ``limit(LOCAL_MAX_EDGES + 1).toArrow()`` over the input
+pairs, decides it: if at most ``LOCAL_MAX_EDGES`` pairs come back, the
+driver labels every node by union-find (no rounds, no pins) and returns
+the labels as an Arrow-backed ``LocalRelation`` (``functions.frames``;
+a Python list would plan as a Python-worker RDD scan that costs more
+per execution than the loop it replaces). Only integral and string ids
+take this route, and only when both endpoint columns share the type:
+there Python's ``<`` is Spark's order (strings compare by code point,
+which is UTF-8 byte order). Floats (NaN, -0.0), decimals, dates,
+timestamps, binary, collated strings and nested types go to the loop.
+NULL endpoints keep the loop's semantics: a NULL never links its
+neighbours (it matches no join key), the NULL node's label is the min
+of its neighbours' labels, and ``(NULL, NULL)`` alone labels NULL.
+Above the constant the read wastes at most ``LOCAL_MAX_EDGES + 1`` rows
+and the loop runs unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from pyield_spark.functions.frames import local_frame
 from pyield_spark.operators.pinning import pin
 
 # Longest one connected_components call waits on an Observation: after
 # the first timeout its remaining rounds read the checksum with an
 # explicit agg, so the worst case is one wait per call, not per round.
 OBS_WAIT_S = 60.0
+
+# Most input pairs the driver route takes. At this size (graphs built
+# from spark.range, local[4] on a 4-vCPU VM, end to end with a count of
+# the labels) the driver route takes 4.1-7.1 s on 6-node near-cliques
+# against 6.3-13.3 s for the loop's 3 rounds, and 7.1-7.5 s on
+# 1000-node paths against 36-51 s for its 12 rounds.
+LOCAL_MAX_EDGES = 1_000_000
+
+# id types whose Python order is Spark's order (StringType() is the
+# default UTF8_BINARY collation; a collated string type is not equal)
+_DRIVER_ID_TYPES = (ByteType(), ShortType(), IntegerType(), LongType(), StringType())
 
 
 def _chk_col():
@@ -101,6 +139,55 @@ def _observed_chk(obs, labels: DataFrame, timeout: float):
     return box["v"], True
 
 
+def _union_find_labels(us: list, vs: list) -> list[tuple]:
+    """(node, component-min id) rows for the pairs ``zip(us, vs)``, with
+    the loop's NULL semantics (see the module docstring)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    null_nbrs = []
+    has_null = False
+    for u, v in zip(us, vs):
+        if u is None or v is None:
+            has_null = True
+            if u is not None or v is not None:
+                x = v if u is None else u
+                parent.setdefault(x, x)
+                null_nbrs.append(x)
+            continue
+        ru, rv = find(parent.setdefault(u, u)), find(parent.setdefault(v, v))
+        if ru != rv:  # the smaller root wins, so every root is its min
+            parent[max(ru, rv)] = min(ru, rv)
+    rows = [(x, find(x)) for x in parent]
+    if has_null:
+        rows.append((None, min((find(x) for x in null_nbrs), default=None)))
+    return rows
+
+
+def _driver_labels(edges: DataFrame, src: str, dst: str) -> DataFrame | None:
+    """The (node, cluster_id) frame by union-find on the driver, or None
+    when the pairs' id type or count sends them to the loop."""
+    uv = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    id_type, dst_type = (f.dataType for f in uv.schema)
+    if id_type != dst_type or id_type not in _DRIVER_ID_TYPES:
+        return None
+    pairs = uv.limit(LOCAL_MAX_EDGES + 1).toArrow()
+    if pairs.num_rows > LOCAL_MAX_EDGES:
+        return None
+    rows = _union_find_labels(pairs["u"].to_pylist(), pairs["v"].to_pylist())
+    schema = StructType(
+        [StructField("node", id_type), StructField("cluster_id", id_type)]
+    )
+    return local_frame(edges.sparkSession, rows, schema)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -124,15 +211,26 @@ def connected_components(
     doubling join (one labels-sized shuffle per round) would be pure
     overhead there (~+20% measured on q_dedup_clusters at sf0.1);
     deep components get the log-bound behavior from round
-    ``accelerate_after``+1 on. ``stats`` (optional dict) receives
-    ``{"rounds": n}`` for instrumentation.
+    ``accelerate_after``+1 on. ``stats`` (optional dict) receives the
+    route taken: ``{"rounds": 0, "route": "driver"}`` or
+    ``{"rounds": n, "route": "spark"}``.
 
-    Raises ``RuntimeError`` if the fixpoint is not reached within
-    ``max_iter`` rounds: a silent early stop would return labels that
-    LOOK valid but split real components — the one failure mode a
+    A graph of at most ``LOCAL_MAX_EDGES`` pairs with integral or
+    string ids is solved on the driver (module docstring, "Route");
+    ``max_iter``, ``accelerate`` and ``accelerate_after`` apply to the
+    distributed loop only.
+
+    Raises ``RuntimeError`` if the loop does not reach the fixpoint
+    within ``max_iter`` rounds: a silent early stop would return labels
+    that LOOK valid but split real components — the one failure mode a
     dedup pipeline must never hit quietly. With acceleration on,
     max_iter=40 covers any graph up to ~2^34 nodes of pure path.
     """
+    local = _driver_labels(edges, src, dst)
+    if local is not None:
+        if stats is not None:
+            stats.update(rounds=0, route="driver")
+        return local
     und = pin(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -244,7 +342,7 @@ def connected_components(
             " rounds)"
         )
     if stats is not None:
-        stats["rounds"] = rounds
+        stats.update(rounds=rounds, route="spark")
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

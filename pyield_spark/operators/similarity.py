@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pyield_spark.functions.frames import local_frame
 from pyield_spark.functions.sql import ident
 from pyield_spark.operators.pinning import pin
 
@@ -360,9 +361,7 @@ def _trained_cents_frame(
         for x in c:
             n2 += x * x
         rows.append((i, c, n2))
-    return spark.createDataFrame(
-        rows, schema="_cid long, _cvec array<double>, _cnorm2 double"
-    )
+    return local_frame(spark, rows, "_cid long, _cvec array<double>, _cnorm2 double")
 
 
 def _ivf_codebook(base: DataFrame, n_centroids: int) -> DataFrame:
@@ -575,7 +574,7 @@ def _cents_frame_from_head(spark, head, id_type) -> DataFrame:
         StructField("_cvec", ArrayType(DoubleType())),
         StructField("_cnorm2", DoubleType()),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _pq_codebooks_from_rows(vecs: list[list[float]], m: int, dim: int):

@@ -18,6 +18,7 @@ from pyield_spark.bonds.pricing import (
     ntnb_cotacao,
     pu_from_vna_expr,
 )
+from pyield_spark.functions.frames import local_frame
 from pyield_spark.queries import query, tables
 from pyield_spark.queries.fixed_income import _CAL
 from pyield_spark.queries.oracle_helpers import (
@@ -606,7 +607,8 @@ def q_ntnb1_curva_zero(spark, sf_dir):
     flows = explode_payment_dates(bonds, "liq", "ven", 1, "pay_date")
     flows = du_mod.contar(flows, "liq", "pay_date", alias="du")
 
-    seg = spark.createDataFrame(
+    seg = local_frame(
+        spark,
         _nb1z_segments(),
         "g int, lo long, hi long, flat boolean, du_j long, tx_j double, "
         "du_k long, tx_k double",

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, StructType
 
+from pyield_spark.functions.frames import local_frame
+
 # (json_normalize path, canonical name, spark type) — mirrors
 # COLUNAS_INTRADIA (pyield/b3/derivativos_intradia.py:51-77) including
 # the trailing optional block (offers, option fields, side type).
@@ -122,7 +124,7 @@ def read_derivativos_json(spark: SparkSession, path: str) -> DataFrame:
         # "Quotation not available" responses / empty payloads →
         # empty frame with the full canonical schema
         fields = ", ".join(f"{n} {t}" for _, n, t in INTRADIA_COLUMNS)
-        return spark.createDataFrame([], fields + ", snapshot_file string")
+        return local_frame(spark, [], fields + ", snapshot_file string")
 
     # full file PATH, not basename: a date-partitioned poll layout
     # (days/*/snap.json) re-uses file names across directories, and a

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyield_spark.functions.frames import local_frame
 from pyield_spark.sources.intradia_json import (
     canonical_quote_columns,
     processar_intradia,
@@ -150,7 +151,7 @@ def intradia_stream_enrich(
         # an empty frame with the canonical schema, not a read error
         return processar_intradia(
             _canonical_select(
-                spark.createDataFrame([], PAYLOAD_DDL).select(
+                local_frame(spark, [], PAYLOAD_DDL).select(
                     F.explode("Scty").alias("s"),
                     F.lit(None).cast("string").alias("snapshot_file"),
                 )

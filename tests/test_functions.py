@@ -241,3 +241,29 @@ def test_round_pl_pround_truncar_values(spark):
             for form in ("col", "sql"):
                 got = r[f"{name}_{form}"]
                 assert same(got, w), (x, name, form, got, w)
+
+
+def test_local_frame_is_an_exact_local_relation(spark):
+    """Driver rows become a LocalTableScan, not a Python-worker RDD
+    scan; 64-bit ids, NULLs, dates and arrays round-trip exactly; a row
+    of the wrong width raises instead of being truncated."""
+    import pytest
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from pyield_spark.functions.frames import local_frame
+
+    rows = [
+        (2**62 + 1, dt.date(2026, 2, 6), [1.5, None], "é"),
+        (None, None, None, None),
+    ]
+    df = local_frame(spark, rows, "id long, d date, v array<double>, s string")
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in df.collect()] == rows
+
+    empty = local_frame(spark, [], StructType([StructField("id", LongType())]))
+    assert empty.schema == StructType([StructField("id", LongType())])
+    assert empty.count() == 0
+
+    with pytest.raises(Exception, match="Tuple size"):
+        local_frame(spark, [(1, 2)], "id long")

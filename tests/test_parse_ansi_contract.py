@@ -63,7 +63,7 @@ def test_malformed_yields_null_under_ansi(ansi, expr_fn):
     assert out == [None] * len(MALFORMED), f"{expr_fn.__name__}: {out}"
 
 
-def test_construction_time_aggregates_survive_ansi(ansi):
+def test_construction_time_aggregates_survive_ansi(ansi, monkeypatch):
     """The registry-wide vanilla lap re-forces ANSI only AFTER query
     construction, so work that executes EAGERLY inside the builders —
     the connected-components convergence checksum collect and the
@@ -71,9 +71,13 @@ def test_construction_time_aggregates_survive_ansi(ansi):
     ``tables()`` just set. Drive both operators directly on an ANSI-on
     session so the decimal(38,0) checksum and the kernel's mean
     aggregation are themselves proven ANSI-safe (a revert of either
-    round-6 fix fails HERE even though the vanilla lap stays green)."""
-    from pyield_spark.operators.graph import connected_components
+    round-6 fix fails HERE even though the vanilla lap stays green).
+    Connected components is forced onto the distributed loop, the
+    route that computes the checksum."""
+    from pyield_spark.operators import graph
     from pyield_spark.operators.semantic import kmeans_assign
+
+    monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", 0)
 
     assert ansi.conf.get("spark.sql.ansi.enabled") == "true"
     # string ids: xxhash64 values span the full long range, so a few
@@ -83,7 +87,7 @@ def test_construction_time_aggregates_survive_ansi(ansi):
         + [("zzz_1", "zzz_2")],
         "id_a string, id_b string",
     )
-    comp = connected_components(edges).collect()
+    comp = graph.connected_components(edges).collect()
     assert len(comp) == 43
     assert ansi.conf.get("spark.sql.ansi.enabled") == "true"
 

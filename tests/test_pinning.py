@@ -34,7 +34,9 @@ def test_pin_rejects_unknown_mode(spark, monkeypatch):
 def test_pin_reliable_mode_connected_components(spark, monkeypatch, tmp_path):
     """The reliable route must produce the same labels as the default
     AND actually write RDD checkpoints into the configured directory
-    (the recompute path an executor loss needs)."""
+    (the recompute path an executor loss needs). Forced onto the
+    distributed loop: the driver route pins nothing."""
+    monkeypatch.setattr(gr, "LOCAL_MAX_EDGES", 0)
     ckdir = str(tmp_path / "ck")
     monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
@@ -163,9 +165,11 @@ def test_observed_chk_times_out_to_agg_fallback(spark):
 def test_cc_observation_wait_bounded_per_call(spark, monkeypatch):
     """After one Observation read times out, the rest of that
     connected_components call reads checksums with the explicit agg:
-    one bounded wait per call, not one per round."""
+    one bounded wait per call, not one per round. Forced onto the
+    distributed loop: the driver route reads no checksum."""
     import pyspark.sql
 
+    monkeypatch.setattr(gr, "LOCAL_MAX_EDGES", 0)
     release = threading.Event()
     reads = []
 

@@ -173,7 +173,8 @@ def test_no_driver_collect_in_library_code():
 
     - the 1-row-per-round convergence aggregate of the
       connected-components fixpoint (operators/graph.py) — standard
-      for iterative algorithms, bounded by max_iter;
+      for iterative algorithms, bounded by max_iter (its driver route
+      reads at most ``LOCAL_MAX_EDGES + 1`` pairs with ``toArrow``);
     - the k-row-per-round centroid hop of Lloyd's k-means
       (operators/semantic.py, round 6) — k·dim doubles, the same
       driver-side hop Spark MLlib's KMeans makes every iteration, so

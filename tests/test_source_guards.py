@@ -9,7 +9,11 @@ shows up as a named failure before any query runs.
 - each expression helper has one public entry point: the deleted
   Column/SQL-string twins stay deleted;
 - every lineage cut goes through ``operators.pinning.pin``, the one
-  place that picks ``localCheckpoint`` or reliable ``checkpoint``.
+  place that picks ``localCheckpoint`` or reliable ``checkpoint``;
+- every frame built from driver rows goes through
+  ``functions.frames.local_frame`` (an Arrow ``LocalRelation``), never a
+  ``createDataFrame`` over a Python list, which plans as a Python-worker
+  RDD scan.
 """
 
 import re
@@ -38,6 +42,9 @@ DELETED_RE = re.compile(r"\b(" + "|".join(DELETED_TWINS) + r")\b")
 
 LINEAGE_CUT = re.compile(r"\.(localCheckpoint|checkpoint)\(")
 PIN_MODULE = PKG / "operators" / "pinning.py"
+
+CREATE_DF = re.compile(r"\bcreateDataFrame\(")
+FRAMES_MODULE = PKG / "functions" / "frames.py"
 
 
 def _hits(pattern: re.Pattern, sources=SOURCES) -> list[str]:
@@ -69,6 +76,12 @@ def test_lineage_cuts_go_through_pin():
     assert not bad, "cut lineage with pinning.pin():\n" + "\n".join(bad)
 
 
+def test_driver_rows_go_through_local_frame():
+    bad = _hits(CREATE_DF, [p for p in SOURCES if p != FRAMES_MODULE])
+    assert not bad, "build driver-row frames with local_frame():\n" + "\n".join(bad)
+    assert FRAMES_MODULE in SOURCES
+
+
 def test_guards_catch_what_they_target():
     assert RAW_SPLICE.search('f"CAST(`{c}` AS DOUBLE)"')
     assert not RAW_SPLICE.search('``{"registros": [...]}``')
@@ -79,3 +92,6 @@ def test_guards_catch_what_they_target():
     assert LINEAGE_CUT.search(").checkpoint()")
     assert not LINEAGE_CUT.search("cur = pin(cur, eager=False)")
     assert not LINEAGE_CUT.search("sc.setCheckpointDir(ckdir)")
+    assert CREATE_DF.search("spark.createDataFrame([], PAYLOAD_DDL)")
+    assert CREATE_DF.search("seg = spark.createDataFrame(")
+    assert not CREATE_DF.search("local_frame(spark, rows, schema)")

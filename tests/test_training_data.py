@@ -21,12 +21,14 @@ def test_connected_components_path_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_deep_chain_log_rounds(spark):
+def test_connected_components_deep_chain_log_rounds(spark, monkeypatch):
     """A 400-node path (diameter 399) — plain propagation would need
     ~400 rounds; pointer doubling must converge in O(log d) and still
-    label every node with the component min."""
+    label every node with the component min. Forced onto the
+    distributed loop (the driver route would solve it in 0 rounds)."""
     import pytest
 
+    monkeypatch.setattr(gr, "LOCAL_MAX_EDGES", 0)
     n = 400
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
@@ -37,6 +39,7 @@ def test_connected_components_deep_chain_log_rounds(spark):
         for r in gr.connected_components(edges, stats=stats).collect()
     }
     assert got == {i: 1 for i in range(1, n + 1)}
+    assert stats["route"] == "spark"
     # 3 plain warmup rounds (adaptive delay), then doubling halves the
     # remaining ~396-hop pointer distance: 3 + ~log2(396) + slack
     assert stats["rounds"] <= 16
@@ -63,10 +66,11 @@ def test_connected_components_empty_edges(spark):
     assert all(r["cluster_id"] == r["doc_id"] for r in rows)
 
 
-def test_connected_components_accelerate_parity(spark):
+def test_connected_components_accelerate_parity(spark, monkeypatch):
     """Doubling changes rounds, never results: same labels as the plain
     propagation route on a mixed graph (string ids exercise the
-    xxhash64 checksum path too)."""
+    xxhash64 checksum path too). Both runs take the distributed loop."""
+    monkeypatch.setattr(gr, "LOCAL_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y"), ("c", "d"), ("m", "m")],
         "id_a string, id_b string",
@@ -81,6 +85,124 @@ def test_connected_components_accelerate_parity(spark):
     }
     assert fast == plain
     assert ("d", "a") in fast and ("y", "x") in fast
+
+
+def _cc_both_routes(edges, monkeypatch):
+    """(driver-route labels, loop labels) as sets of (node, cluster_id),
+    each route checked through ``stats``."""
+    def run(route):
+        stats: dict = {}
+        rows = {
+            (r["node"], r["cluster_id"])
+            for r in gr.connected_components(edges, stats=stats).collect()
+        }
+        assert stats["route"] == route
+        return rows
+
+    driver = run("driver")
+    with monkeypatch.context() as m:
+        # below 0, not at 0: an empty pair list fits a bound of 0
+        m.setattr(gr, "LOCAL_MAX_EDGES", -1)
+        loop = run("spark")
+    return driver, loop
+
+
+def test_cc_driver_route_matches_loop_on_random_graphs(spark, monkeypatch):
+    """Seeded random graphs with self-loops and repeated pairs, as
+    disjoint id ranges in one edge list: union-find on the driver gives
+    the loop's labels."""
+    import random
+
+    rng = random.Random(7)
+    pairs = []
+    for g in range(4):
+        n = rng.randint(6, 40)
+        base = 1000 * g
+        pairs += [
+            (base + rng.randrange(n), base + rng.randrange(n))
+            for _ in range(rng.randint(3, 2 * n))
+        ]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    driver, loop = _cc_both_routes(edges, monkeypatch)
+    assert driver == loop
+    assert {x for p in pairs for x in p} == {n for n, _ in driver}
+
+
+def test_cc_driver_route_null_endpoints(spark, monkeypatch):
+    """NULL never links its neighbours, the NULL node takes the min of
+    its neighbours' labels, and (NULL, NULL) alone labels NULL — on
+    both routes."""
+    edges = spark.createDataFrame(
+        [(1, None), (1, 2), (None, 3), (7, 7)], "id_a long, id_b long"
+    )
+    driver, loop = _cc_both_routes(edges, monkeypatch)
+    assert driver == loop == {(1, 1), (2, 1), (3, 3), (7, 7), (None, 1)}
+
+    edges = spark.createDataFrame([(None, 4)], "id_a int, id_b int")
+    driver, loop = _cc_both_routes(edges, monkeypatch)
+    assert driver == loop == {(4, 4), (None, 4)}
+
+    edges = spark.createDataFrame([(None, None)], "id_a long, id_b long")
+    driver, loop = _cc_both_routes(edges, monkeypatch)
+    assert driver == loop == {(None, None)}
+
+
+def test_cc_driver_route_empty_strings_and_wide_ids(spark, monkeypatch):
+    """The empty pair list; string ids ordered by code point (``Z`` <
+    ``a`` < ``z`` < ``é``, Spark's UTF-8 byte order); ids above 2^53
+    that a float64 column would merge."""
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    driver, loop = _cc_both_routes(empty, monkeypatch)
+    assert driver == loop == set()
+
+    edges = spark.createDataFrame(
+        [("é", "z"), ("a", "Z"), ("é", "é"), ("b", "é")],
+        "id_a string, id_b string",
+    )
+    driver, loop = _cc_both_routes(edges, monkeypatch)
+    assert driver == loop == {
+        ("é", "b"), ("z", "b"), ("b", "b"), ("a", "Z"), ("Z", "Z"),
+    }
+
+    big = 2**62 + 1
+    edges = spark.createDataFrame(
+        [(big, big + 1), (big + 3, big + 2)], "id_a long, id_b long"
+    )
+    driver, loop = _cc_both_routes(edges, monkeypatch)
+    assert driver == loop == {
+        (big, big), (big + 1, big), (big + 2, big + 2), (big + 3, big + 2),
+    }
+
+
+def test_cc_route_gate_on_size_and_type(spark, monkeypatch):
+    """One pair above the constant, or a non-integral id type, takes
+    the distributed loop; the driver route returns a LocalRelation."""
+    monkeypatch.setattr(gr, "LOCAL_MAX_EDGES", 3)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6)], "id_a long, id_b long"
+    )
+    stats: dict = {}
+    got = {tuple(r) for r in gr.connected_components(edges, stats=stats).collect()}
+    assert stats["route"] == "spark" and stats["rounds"] > 0
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5)}
+
+    stats = {}
+    three = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
+    comp = gr.connected_components(three, stats=stats)
+    assert stats == {"rounds": 0, "route": "driver"}
+    assert "LocalTableScan" in comp._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(gr, "LOCAL_MAX_EDGES", 1_000)
+    stats = {}
+    dbl = spark.createDataFrame([(1.0, 2.0), (2.0, 3.0)], "id_a double, id_b double")
+    got = {tuple(r) for r in gr.connected_components(dbl, stats=stats).collect()}
+    assert stats["route"] == "spark"
+    assert got == {(1.0, 1.0), (2.0, 1.0), (3.0, 1.0)}
+
+    stats = {}
+    mixed = spark.createDataFrame([(1, 2)], "id_a int, id_b long")
+    gr.connected_components(mixed, stats=stats).collect()
+    assert stats["route"] == "spark"
 
 
 def test_dedup_decisions_keeps_one_per_cluster(spark):

@@ -348,9 +348,14 @@ def main():
     # AVERAGE case (LSH-near-clique components, diameter ~3 — what real
     # near-dup graphs look like; component COUNT grows with the factor).
     # Edges are generated distributively via spark.range — no driver
-    # lists. Reports wall, rounds-to-fixpoint and labeled-node count.
+    # lists. Both shapes run the distributed loop (LOCAL_MAX_EDGES = 0
+    # turns the driver route off), which is what they measure. Reports
+    # wall, route, rounds-to-fixpoint and labeled-node count.
     def cc_chain():
+        from pyield_spark.operators import graph
         from pyield_spark.operators.graph import connected_components
+
+        graph.LOCAL_MAX_EDGES = 0
 
         chain_len = 1000 * FACTOR          # diameter scales with FACTOR
         n_chains = 20
@@ -360,14 +365,20 @@ def main():
         )
         stats = {}
         n = connected_components(edges, stats=stats).count()
-        print(f"  cc_chain rounds={stats['rounds']} (diameter {chain_len - 1})")
+        print(
+            f"  cc_chain route={stats['route']} rounds={stats['rounds']}"
+            f" (diameter {chain_len - 1})"
+        )
         return n
 
     if want("cc_chain"):
         timed(f"cc_chain_{FACTOR}x", cc_chain)
 
     def cc_clique():
+        from pyield_spark.operators import graph
         from pyield_spark.operators.graph import connected_components
+
+        graph.LOCAL_MAX_EDGES = 0
 
         n_comp = 4000 * FACTOR             # component count scales
         size = 6
@@ -386,7 +397,10 @@ def main():
         )
         stats = {}
         n = connected_components(edges, stats=stats).count()
-        print(f"  cc_clique rounds={stats['rounds']} ({n_comp:,} components)")
+        print(
+            f"  cc_clique route={stats['route']} rounds={stats['rounds']}"
+            f" ({n_comp:,} components)"
+        )
         return n
 
     if want("cc_clique"):
